@@ -14,12 +14,6 @@ object Bench {
     // pipeline (count() would let Catalyst prune projections); one untimed
     // warmup pass over all queries amortizes parquet footers + codegen so
     // the timed passes measure steady-state engine throughput.
-    // SPARK_GRAFT_CACHE=1 serves tables from the in-memory columnar cache.
-    // MEASURED SLOWER at sf0.1 (21s vs 11s total): InMemoryRelation
-    // materializes all columns and drops parquet pushdown/vectorization,
-    // while the OS page cache already absorbs the re-read I/O — so the
-    // default stays on direct vectorized parquet scans.
-    graft.tables.Tables.cacheEnabled = sys.env.get("SPARK_GRAFT_CACHE").contains("1")
     // Machine-load witnesses (round 10's driver BENCH recorded a 3.3x
     // phantom slowdown because a concurrent ~10-core process owned the
     // box for the whole window): capture 1-min loadavg before the warmup

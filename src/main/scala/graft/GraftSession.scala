@@ -14,6 +14,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
+    .withExtensions(new graft.plans.GraftExtensions) // SQL functions, optimizer rules
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -66,7 +67,6 @@ object GraftSession {
         .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.register(spark)
     spark
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for hot-key aggregations and joins.
@@ -55,35 +56,34 @@ object SkewOps {
     * scan — one gzip file, or a single-row-group parquet like the test
     * SFs — plans as ONE task, and every per-row-CPU stage fused above
     * it (media encode/decode, hashing) runs on one core while 31 idle;
-    * when the single-partition frame is then persisted, every consumer
-    * additionally serializes on the one block's BlockInfoManager lock
-    * (measured: t_curate_media3 thread dumps show 24 executor threads
-    * parked in lockForReading behind 1-2 runnable). Hash-repartition on
-    * `key` (deterministic, so task retries land rows identically —
-    * never a rand-derived key) up to the session's default parallelism,
-    * ONLY when the scan is under-split: on a real many-split corpus the
-    * condition is false and no exchange is added, so payload is never
-    * re-shuffled at cluster scale. Apply to frames whose downstream
-    * per-row work dwarfs one row's shuffle bytes (fixture id columns,
-    * small profile frames) — not to wide fact scans feeding plain
-    * column-strip aggregation. */
+    * a persisted single-partition frame also serializes every consumer
+    * on its one block's lock (t_curate_media3: 24 executor threads parked
+    * in lockForReading). Hash-repartition on `key` (deterministic, so
+    * task retries land rows identically — never a rand-derived key) up
+    * to the session's default parallelism, ONLY when the frame is
+    * under-split: on a real many-split corpus no exchange is added. Apply
+    * to frames whose downstream per-row work dwarfs one row's shuffle
+    * bytes (fixture id columns, small profile frames) — not to wide fact
+    * scans feeding plain column-strip aggregation. Deciding runs no job:
+    * `df.rdd.getNumPartitions` would, under AQE, execute every exchange
+    * already in the frame and throw the shuffle away. */
   def spreadScan(df: DataFrame, key: String): DataFrame =
-    spreadScan(df, key, factor = 1)
+    if (df.isStreaming) df // a streaming frame has no partition count yet
+    else spreadScan(df, key, factor = 1, df.queryExecution.executedPlan match {
+      // AQE wraps exactly the plans that hold or need an exchange
+      case a: AdaptiveSparkPlanExec => a.inputPlan.outputPartitioning.numPartitions
+      case p => p.execute().getNumPartitions // builds the RDD, no job
+    })
 
-  /** As above, with an under-split factor: spread only when the scan has
-    * less than 1/`factor` of the session's parallelism. factor=1 (narrow
-    * frames — fixture id columns, whose shuffle is ~8 bytes/row) spreads
-    * any under-split scan; the whole-row Tables loaders pass factor=4 so
-    * a scan that already planned a reasonable width (e.g. the 32-row-
-    * group replica fixtures under the 8 MB local split) is NOT paid a
-    * full-table shuffle for the last 2-4× of parallelism — measured at
-    * sf3: q1 ran 4-26 s/loop with the unconditional spread (1.5 GB
-    * exchange + GC) vs ~2 s flat scanning 21-way without it. */
-  def spreadScan(df: DataFrame, key: String, factor: Int): DataFrame = {
-    if (df.isStreaming) return df // .rdd is illegal on a streaming frame
+  /** As above, for a frame whose partition count the caller knows (the
+    * Tables loaders memoize each scan's): spread only below 1/`factor` of
+    * the parallelism. The whole-row loaders pass factor=4, so a scan that
+    * planned a reasonable width (the 32-row-group replica fixtures) is not
+    * paid a full-table shuffle for the last 2-4×: at sf3 q1 ran 4-26 s/loop
+    * spread unconditionally vs ~2 s scanning 21-way. */
+  def spreadScan(df: DataFrame, key: String, factor: Int, partitions: Int): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * factor < want) df.repartition(want, col(key))
-    else df
+    if (partitions * factor < want) df.repartition(want, col(key)) else df
   }
 
   /** Two-phase salted aggregation over `keys`. */

@@ -279,9 +279,9 @@ object GraftFunctions {
   }
 
   /** (name → builder) for every SQL-surface function — the ONE source of
-    * truth shared by both registration paths: per-session `register` (the
-    * engine's own sessions) and the `GraftExtensions` injection
-    * (`spark.sql.extensions` — sessions the engine does not construct).
+    * truth shared by both registration paths: per-session `register` and
+    * the `GraftExtensions` injection (every session GraftSession.configure
+    * builds, or `spark.sql.extensions` for sessions the engine does not).
     * dim/nPlanes/centroid-set args must be literals: they size matrices
     * embedded in the expression instance at plan time. */
   private[plans] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -342,9 +342,11 @@ object GraftFunctions {
   * environment setup" posture (SplitFunction registration,
   * DwsTrafficKeywordPageViewWindow.java:88) expressed Spark-first.
   * Injected and per-session registration share [[GraftFunctions.builders]],
-  * so the two paths cannot drift. */
+  * so the two paths cannot drift. The optimizer rules ([[DoubleToDecimal]])
+  * ride the same injection; GraftSession.configure applies it to every
+  * session the engine builds. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, b) =>
       ext.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),
@@ -352,4 +354,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
           "graft.plans.GraftFunctions", name),
         b))
     }
+    ext.injectOptimizerRule(_ => DoubleToDecimal)
+  }
 }

@@ -2,7 +2,7 @@ package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-provided parquet testdata (TESTDATA.md).
   *
@@ -11,27 +11,30 @@ import org.apache.spark.sql.types.LongType
   * already gives vectorized scans, predicate pushdown and column pruning.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
+  /** Each table's inferred schema (a footer-reading job, ~80 ms even for
+    * nation) and scan split count (~35 ms of planning), resolved once per
+    * path, file length and modification time, and the settings that change
+    * inference or splitting. Every load still builds a fresh relation: one
+    * DataFrame shared by two loads would trip the ambiguous self-join check. */
+  private val resolved = scala.collection.concurrent.TrieMap.empty[Seq[Any], (StructType, Int)]
+  private val keyConfs = Seq("legacy.parquet.nanosAsLong", "parquet.inferTimestampNTZ.enabled",
+    "parquet.binaryAsString", "parquet.int96AsTimestamp", "parquet.mergeSchema",
+    "files.maxPartitionBytes", "files.openCostInBytes", "files.minPartitionNum",
+    "files.maxPartitionNum", "leafNodeDefaultParallelism").map("spark.sql." + _)
 
-  /** Opt-in table cache (Bench SPARK_GRAFT_CACHE=1). Measured SLOWER than
-    * direct parquet at sf0.1 (see Bench): InMemoryRelation loses pushdown +
-    * vectorized-scan advantages and the OS page cache already absorbs
-    * repeat I/O. Kept as a seam because on a real cluster with remote
-    * object storage the tradeoff reverses (network round-trips dominate,
-    * not decode). */
-  @volatile var cacheEnabled: Boolean = false
-  // keyed by applicationId too: a cached DataFrame is bound to its session,
-  // and serving one from a stopped session would throw on first action
-  private val cached =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
+  private def read(spark: SparkSession, sfDir: String, name: String): (DataFrame, Int) = {
+    val path = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(path).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    val (schema, splits) = resolved.getOrElseUpdate(Seq(fs.makeQualified(path), files,
+        keyConfs.map(spark.conf.getOption), spark.sparkContext.defaultParallelism), {
+      val inferred = spark.read.parquet(path.toString).schema
+      (inferred, spark.read.schema(inferred).parquet(path.toString).rdd.getNumPartitions)
+    })
+    (spark.read.schema(schema).parquet(path.toString), splits)
+  }
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (cacheEnabled)
-      cached.getOrElseUpdate((spark.sparkContext.applicationId, sfDir, name),
-        spark.read.parquet(s"$sfDir/$name.parquet").persist())
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = read(spark, sfDir, name)._1
 
   /** FACT/corpus loaders spread an under-split scan (round-15): the test
     * SFs are single-row-group parquet files, so every scan above them
@@ -44,23 +47,26 @@ object Tables {
     * and locally the deterministic key (never rand — retry-safe) means
     * joins/aggregations keyed the same way reuse the exchange instead
     * of adding one. Dimension tables stay unspread (they broadcast). */
-  private def spread(df: DataFrame, key: String): DataFrame =
-    graft.operators.SkewOps.spreadScan(df, key, factor = 4)
+  private def spread(spark: SparkSession, sfDir: String, name: String, key: String,
+      prepare: DataFrame => DataFrame = identity): DataFrame = {
+    val (df, splits) = read(spark, sfDir, name)
+    graft.operators.SkewOps.spreadScan(prepare(df), key, factor = 4, splits)
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame   = load(s, d, "customer")
   def supplier(s: SparkSession, d: String): DataFrame   = load(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame       = load(s, d, "part")
-  def orders(s: SparkSession, d: String): DataFrame     = spread(load(s, d, "orders"), "o_orderkey")
-  def lineitem(s: SparkSession, d: String): DataFrame   = spread(load(s, d, "lineitem"), "l_orderkey")
+  def orders(s: SparkSession, d: String): DataFrame     = spread(s, d, "orders", "o_orderkey")
+  def lineitem(s: SparkSession, d: String): DataFrame   = spread(s, d, "lineitem", "l_orderkey")
   /** events.parquet stores `ts` as TIMESTAMP(NANOS), which Spark's parquet
     * reader only accepts as a long (spark.sql.legacy.parquet.nanosAsLong=true,
     * set by GraftSession). Normalize to TimestampType (µs, truncating ns) so
     * every pipeline sees a plain event-time column.
     */
   def events(s: SparkSession, d: String): DataFrame =
-    spread(normalizeEvents(load(s, d, "events")), "event_id")
+    spread(s, d, "events", "event_id", normalizeEvents)
 
   /** ns-long `ts` -> TimestampType (µs, truncating). Shared by the batch
     * loader and streaming file sources (which must read the raw schema).
@@ -78,6 +84,6 @@ object Tables {
         raw.withColumn("ts", col("ts").cast("timestamp"))
       case _ => raw
     }
-  def documents(s: SparkSession, d: String): DataFrame  = spread(load(s, d, "documents"), "doc_id")
-  def embeddings(s: SparkSession, d: String): DataFrame = spread(load(s, d, "embeddings"), "vec_id")
+  def documents(s: SparkSession, d: String): DataFrame  = spread(s, d, "documents", "doc_id")
+  def embeddings(s: SparkSession, d: String): DataFrame = spread(s, d, "embeddings", "vec_id")
 }

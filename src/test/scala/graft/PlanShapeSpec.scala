@@ -64,6 +64,26 @@ class PlanShapeSpec extends AnyFunSuite {
     }.isEmpty, s"no dimension join may shuffle the fact:\n$p")
   }
 
+  test("warehouse headlines: every DOUBLE -> DECIMAL cast sits in the exact-cast fallback") {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, If, MakeDecimal}
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    // a Cast reachable other than as the else branch of DoubleToDecimal's
+    // If means the money column is formatted through Double.toString
+    def bare(e: Expression): Seq[Cast] = e match {
+      case If(fast, exact: MakeDecimal, _: Cast) => bare(fast) ++ bare(exact)
+      case c @ Cast(x, _: DecimalType, _, _) if x.dataType == DoubleType => c +: bare(x)
+      case _ => e.children.flatMap(bare)
+    }
+    for (name <- Seq("q1_pricing_summary", "q3_top_orders", "q5_nation_revenue",
+        "a1_traffic_window", "dws09_dedup_enrich_window", "j1_wide_join")) {
+      val p = SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan
+      val casts = p.flatMap(_.expressions.flatMap(bare))
+      assert(casts.isEmpty, s"$name: unrewritten ${casts.mkString(", ")}\n$p")
+    }
+    val q1 = SparkEntry.queries("q1_pricing_summary")(spark, dir).queryExecution.optimizedPlan
+    assert(q1.expressions.exists(_.exists(_.isInstanceOf[MakeDecimal])), s"rule did not fire:\n$q1")
+  }
+
   test("j1_wide_join and t_token_stats: zero shuffles above the scans") {
     assert(shuffles("j1_wide_join") === 0)
     assert(shuffles("t_token_stats") === 0)
