@@ -20,9 +20,10 @@ import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
   * `toks`, and it writes the mode ("latin" / "cjk") into the column's
   * metadata; [[of]] reads it back. Models trained through
   * `TextAnalysis.trainLm` / `Classify.trainTokenWeights` record the
-  * training frame's mode, and `Curate.runDocs` / `CurateStream.sink`
-  * REFUSE a mode mismatch in either direction (latin model under cjk,
-  * cjk model under latin) — and refuse an untagged manual binding
+  * training frame's mode, and `Curate.Gates` (the gate chain of both
+  * `Curate.runDocs` and `CurateStream.sink`) REFUSES a mode mismatch in
+  * either direction (latin model under cjk, cjk model under latin) —
+  * and refuses an untagged manual binding
   * ([[Unknown]]) outright, because an unprovenanced tokenization is
   * exactly the silent-mismatch hazard.
   *

@@ -238,6 +238,17 @@ object Dedup {
           graft.functions.TextFunctions.shingleHash32(col("toks"), 3))
           .as("hashes"))
 
+  /** The default MinHash+LSH settings of [[minhashLshPairs]] — the ones
+    * batch curation (pipeline.Curate) runs with, and therefore the ones
+    * streaming curation (graft.streaming.CurateStream) must use for its
+    * registry bands and verify so that stream ≡ batch. */
+  object Lsh {
+    val NumSigs = 8
+    val RowsPerBand = 2
+    val Threshold = 0.8
+    val MaxBucket = 1000
+  }
+
   /** MinHash+LSH near-duplicate pairs.
     *
     * numSigs md5-based signatures, grouped into bands of `rowsPerBand`;
@@ -262,8 +273,8 @@ object Dedup {
   /** LSH band table from a shingle table: (doc_id, b, band_key) — the
     * banding stage of minhashLshPairs, shared with the streaming
     * incremental sink (which registers bands across micro-batches). */
-  private[graft] def bandsFromShingles(sh: DataFrame, numSigs: Int = 8,
-      rowsPerBand: Int = 2): DataFrame = {
+  private[graft] def bandsFromShingles(sh: DataFrame, numSigs: Int = Lsh.NumSigs,
+      rowsPerBand: Int = Lsh.RowsPerBand): DataFrame = {
     require(numSigs >= rowsPerBand && numSigs % rowsPerBand == 0,
       s"numSigs ($numSigs) must be a positive multiple of rowsPerBand " +
         s"($rowsPerBand) — truncating would silently band only the first " +
@@ -330,10 +341,10 @@ object Dedup {
 
   def minhashLshPairs(
       docs: DataFrame,
-      numSigs: Int = 8,
-      rowsPerBand: Int = 2,
-      threshold: Double = 0.8,
-      maxBucket: Int = 1000,
+      numSigs: Int = Lsh.NumSigs,
+      rowsPerBand: Int = Lsh.RowsPerBand,
+      threshold: Double = Lsh.Threshold,
+      maxBucket: Int = Lsh.MaxBucket,
       saltChunk: Int = 0): DataFrame = {
     // persist: the shingle table feeds the signature path AND both sides of
     // the Jaccard join; the band table feeds both sides of the self-join —

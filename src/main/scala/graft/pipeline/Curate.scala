@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftSession
-import graft.operators.{Dedup, TextAnalysis}
+import graft.functions.TokMode
+import graft.operators.{Classify, Dedup, TextAnalysis}
 import graft.tables.Tables
 
 /** End-to-end training-corpus curation — the operators composed into the
@@ -87,6 +88,13 @@ object Curate {
       lmDropped: Long,
       lowQuality: Long, unknownLang: Long, kept: Long, keptTokens: Long)
 
+  /** Every [[Stats]] counter as one JSON object, keyed by the field name
+    * in snake_case (exactDups → exact_dups). */
+  private[graft] def statsJson(s: Stats): String =
+    s.productElementNames.zip(s.productIterator).map { case (k, v) =>
+      "\"" + k.replaceAll("([A-Z])", "_$1").toLowerCase + "\":" + v
+    }.mkString("{", ",", "}")
+
   // the one cache that outlives runDocs (it backs the returned `curated`
   // frame); released by releaseCaches once the caller's terminal action ran.
   // Strong refs + stopped-session purge, same design (and reasons) as
@@ -107,12 +115,23 @@ object Curate {
 
   def run(spark: SparkSession, sfDir: String, minQuality: Double = 0.55,
       nearDup: NearDupPolicy = NearDupPolicy.PairwiseDrop): (DataFrame, Stats) =
-    runDocs(spark, Tables.documents(spark, sfDir), minQuality, nearDup)
+    runDocs(spark, Tables.documents(spark, sfDir), Gates(minQuality = minQuality), nearDup)
 
-  /** The model-gate mode contract, refused LOUDLY and in BOTH directions
-    * BEFORE any work (shared by [[runDocs]] and
-    * graft.streaming.CurateStream.sink):
+  /** The gate chain's configuration — one value shared by [[runDocs]] and
+    * graft.streaming.CurateStream.sink, so both run the same chain:
     *
+    *   [[prepare]] (stripHtml → redactPii → excise → token binding) →
+    *   exact dup → near dup → contaminated → repetitive → gopher_rules →
+    *   classifier → lm_fluency → low_quality → unknown_lang → kept
+    *
+    * Every pre-transform and gate here is per-doc against static inputs
+    * (benchmark tables, trained models, fixed thresholds), so labeling a
+    * micro-batch equals labeling the corpus: only dedup depends on what
+    * came before, and that is the one step each entry point owns.
+    *
+    * Construction enforces the model-gate mode contract, LOUDLY and in
+    * BOTH directions, before any work on either entry point (the checks
+    * read schema metadata only and run no Spark job):
     *  - an LM model whose training tokenization (LmModel.tokMode, written
     *    by trainLm from the TokMode.bind tag) differs from the pipeline
     *    mode scores every bigram at the +1-smoothing floor and silently
@@ -128,10 +147,89 @@ object Curate {
     *    §A.1.1 target English), so under cjk mode zh prose counts as ~1
     *    "word", fails r_wordcount/r_stops, and the WHOLE zh corpus drops
     *    as `gopher_rules`: refused rather than documented-and-allowed,
-    *    per the LM-gate precedent. */
-  private[graft] def requireGateModes(cjk: Boolean, gopher: Option[GopherGate],
-      classifier: Option[ClassifierGate], lm: Option[LmGate]): Unit = {
-    val want = graft.functions.TokMode.name(cjk)
+    *    per the LM-gate precedent.
+    *
+    * @param minQuality docs whose heuristic quality score
+    *   (TextAnalysis.qualityScore; zero-token docs score 0) is below this
+    *   drop as `low_quality`.
+    * @param benchmark when set, docs sharing any `contaminationN`-token
+    *   shingle with this table drop as `contaminated`
+    *   (TextAnalysis.contaminationTable — the pre-training eval-leak
+    *   gate). The table is tokenized in the pipeline's mode IN BOTH MODES:
+    *   both sides of the gram join must live in one token space, and a
+    *   stray caller-bound `toks` of another tokenization must not leak
+    *   through. Off by default.
+    * @param contaminationN shingle width of the `benchmark` gate.
+    * @param maxDup3Frac docs whose duplicate-3-gram fraction
+    *   (TextAnalysis.repetitionScore) exceeds this drop as `repetitive`
+    *   (the Gopher repetition filter). 1.0 disables (the fraction is
+    *   strictly < 1). Off by default.
+    * @param gopher when set, docs failing any Gopher/MassiveText rule
+    *   (see [[GopherGate]]) drop as `gopher_rules` — after the repetition
+    *   gate, before the learned classifier. Off by default.
+    * @param classifier when set, docs the trained model scores <= 0 drop
+    *   as `classifier` (see [[ClassifierGate]]) — after the gopher gate,
+    *   before the heuristic quality score. Off by default.
+    * @param lm when set, docs whose bigram-LM fluency score falls below
+    *   the gate's minMicroAvg drop as `lm_fluency` (see [[LmGate]]) —
+    *   after the classifier gate, before the heuristic quality score. Off
+    *   by default.
+    * @param stripHtml when true, TextAnalysis.stripHtml runs FIRST
+    *   (extraction precedes scrubbing): two docs differing only in markup
+    *   ARE duplicates once it's gone, and no gate or registry may see
+    *   tags/entities.
+    * @param redactPii when true, TextAnalysis.redactPii scrubs every doc
+    *   BEFORE any gate runs (the real-world order: fingerprints, shingles
+    *   and quality scores must reflect the text that ships, and two docs
+    *   differing only in the PII they leak ARE duplicates after the
+    *   scrub). Off by default.
+    * @param excise when set, SURGICAL decontamination runs as the LAST
+    *   pre-transform, before the token binding: every `exciseN`-token
+    *   shingle shared with this benchmark table is EXCISED from the text
+    *   (TextAnalysis.decontaminateSpans, character-offset excision in
+    *   BOTH modes — `preserveStructure`, round 12: shipped text differs
+    *   from lower_root(original) ONLY inside excised ranges, so
+    *   punctuation/line structure survives in latin mode too), and the
+    *   pipeline ingests the excised text, so fingerprints, shingles,
+    *   quality and every gate see the text that ships. The table is
+    *   rebound in the pipeline's mode like `benchmark`'s. The softer
+    *   alternative to the doc-dropping `benchmark` gate (dropping a
+    *   100-page doc for one leaked eval question wastes the other 99
+    *   pages); the two compose — excise first, and still drop docs the
+    *   gate finds contaminated AFTER excision. Docs differing only inside
+    *   excised spans (or only by case) MAY become exact duplicates — that
+    *   is the point, not an artifact.
+    * @param exciseN shingle width of the `excise` pre-transform.
+    * @param cjk mixed-script mode: binds `toks` ONCE on the prepared
+    *   frame through the FUSED `tokenize_array_cjk` kernel
+    *   (plans.TokenizeArrayCjk, one codegen'd linear scan; bit-parity
+    *   with the compositional tokens(text, cjk=true) pinned in PlansSpec),
+    *   and the bound-toks reuse contract (TextAnalysis.withToks /
+    *   Dedup.shingleSets / contaminationGrams / scoreLm) routes that one
+    *   tokenization into quality, language, decontamination, the LM gate,
+    *   AND the near-dup shingle build — so MinHash/Jaccard operate on CJK
+    *   character bigrams exactly as the CJK tokenizer mode pins them
+    *   (u2_cjk_tokens), not on a latin tokenization that strips CJK to
+    *   nothing. The quality stop-rate term gains the zhLexicon bigram arm
+    *   (qualityScore cjk — the term is otherwise constant 0 for pure-zh
+    *   docs). `lm` and `classifier` must be trained on TokMode.bind-bound
+    *   frames of this mode, and `gopher` is refused under cjk (the mode
+    *   contract above). Exact dedup (md5 fingerprint) is script-agnostic
+    *   either way. */
+  final case class Gates(
+      minQuality: Double = 0.55,
+      benchmark: Option[DataFrame] = None,
+      contaminationN: Int = 4,
+      maxDup3Frac: Double = 1.0,
+      gopher: Option[GopherGate] = None,
+      classifier: Option[ClassifierGate] = None,
+      lm: Option[LmGate] = None,
+      stripHtml: Boolean = false,
+      redactPii: Boolean = false,
+      excise: Option[DataFrame] = None,
+      exciseN: Int = 4,
+      cjk: Boolean = false) {
+    private val want = TokMode.name(cjk)
     lm.foreach { g =>
       require(g.model.tokMode == want,
         s"LM gate tokenization mode '${g.model.tokMode}' does not match the " +
@@ -139,7 +237,7 @@ object Curate {
           "graft.functions.TokMode.bind(ref, cjk = <pipeline mode>) before trainLm")
     }
     classifier.foreach { cg =>
-      val m = graft.functions.TokMode.ofWeights(cg.weights)
+      val m = TokMode.ofWeights(cg.weights)
       require(m == want,
         s"classifier gate tokenization mode '$m' does not match the pipeline " +
           s"mode '$want': train the weights via Classify.trainTokenWeights on a " +
@@ -151,155 +249,138 @@ object Curate {
         "gopher_rules — run it on the latin slice of a mixed corpus instead")
   }
 
-  /** Same pipeline over an arbitrary (doc_id, text) frame.
+  /** The pre-transforms in their one order — stripHtml → redactPii →
+    * stripLineFreq → excise — then the mode's token binding. Extraction
+    * precedes scrubbing (markup must be gone before PII patterns, line
+    * identity, or any fingerprint sees the text); surgical excision comes
+    * LAST, because spans must be located in the text that ships and every
+    * fingerprint/gate downstream must see the excised form.
+    *
+    * `stripLineFreq` is batch-only: line hotness is a corpus-level count,
+    * and a line can cross the threshold after earlier micro-batches
+    * already shipped, so the stream passes None.
+    *
+    * The binding runs the FUSED kernel for the mode (one codegen'd scan,
+    * null text → empty array) before the caller's persist, so it runs
+    * once, not once per consumer. Latin mode binds too (round 10): the
+    * bound column is exactly what every consumer would compute
+    * (tokensFused(text) — quality, language, and the shingle build each
+    * re-ran that scan on the cached text), so the binding is a pure
+    * scan-count win: settled sf1 wall 5.6–5.9 → 4.0–4.3 s (−25–30%;
+    * SCALE.md §Round-10, identical accounting; the one-off A/B main
+    * that measured it was retired, see `git log --diff-filter=D --
+    * src/main/scala/graft/tools/CurateCjkBench.scala`). At 100 TB
+    * tokenization is the dominant map-side cost of the pipeline. */
+  private[graft] def prepare(documents: DataFrame, g: Gates,
+      stripLineFreq: Option[Int] = None): DataFrame = {
+    val extracted =
+      if (g.stripHtml) TextAnalysis.stripHtml(documents).select(col("doc_id"), col("text"))
+      else documents
+    val scrubbed =
+      if (g.redactPii) TextAnalysis.redactPii(extracted)
+        .select(col("doc_id"), col("redacted").as("text"))
+      else extracted
+    val stripped = stripLineFreq.fold(scrubbed)(k =>
+      TextAnalysis.stripBoilerplate(scrubbed, k).select(col("doc_id"), col("text")))
+    val excised = g.excise.fold(stripped)(bx =>
+      TextAnalysis.decontaminateSpans(stripped, TokMode.bind(bx, g.cjk), g.exciseN,
+        g.cjk, preserveStructure = true).select(col("doc_id"), col("text")))
+    TokMode.bind(excised, g.cjk)
+  }
+
+  /** The one labeler: every row of `docs` ([[prepare]]d, and persisted by
+    * the caller) carries the first gate that drops it, or 'kept'.
+    * `exactDups` and `nearDups` are the caller's dedup outcome — the
+    * doc_ids it drops as exact and as near duplicates, each id at most
+    * once (they are left-joined) — because dedup is
+    * the one step that depends on more than the doc: batch dedups the
+    * whole corpus, the stream dedups against its Registry. Returns
+    * (doc_id, text, pred_lang, quality, n_tokens, drop_reason).
+    *
+    * Every gate frame is computed over all of `docs` (per-row functions,
+    * map-side) and LEFT-joined: a dropped doc's row is simply never
+    * consulted because the precedence catches it first, and a doc with no
+    * row (zero-token docs have no quality row) is coalesced — to quality
+    * 0, so it lands in low_quality instead of vanishing from the
+    * accounting. */
+  private[graft] def label(docs: DataFrame, g: Gates, exactDups: DataFrame,
+      nearDups: DataFrame): DataFrame = {
+    val quality = TextAnalysis.qualityScore(docs, g.cjk)
+      .select(col("doc_id"), col("quality"), col("n_tokens"))
+    val lang = TextAnalysis.langId(docs).select(col("doc_id"), col("pred_lang"))
+    val contaminated = g.benchmark.map(b =>
+      TextAnalysis.contaminationTable(docs, TokMode.bind(b, g.cjk), g.contaminationN)
+        .select(col("doc_id")).withColumn("__contam", lit(1)))
+    val repetition =
+      if (g.maxDup3Frac < 1.0)
+        Some(TextAnalysis.repetitionScore(docs).select(col("doc_id"), col("dup_3gram_frac")))
+      else None
+    // gopherRules and scoreTokens cover EVERY input doc (null text
+    // coalesces to '', no-token scores to 0); scoreLm too (explode_outer
+    // keeps zero-bigram docs), and its NULL averages pass per LmGate
+    val gopher = g.gopher.map(gg =>
+      TextAnalysis.gopherRules(docs, gg.minWords, gg.maxWords, gg.requiredStops)
+        .select(col("doc_id"), col("keep").as("__goph_keep")))
+    val classifier = g.classifier.map(cg =>
+      Classify.scoreTokens(docs, cg.weights, cg.buckets)
+        .select(col("doc_id"), col("pred").as("__cls_keep")))
+    val lm = g.lm.map(lg =>
+      TextAnalysis.scoreLm(docs, lg.model).select(col("doc_id"),
+        coalesce(col("lm_micro_avg") >= lg.minMicroAvg, lit(true)).as("__lm_keep")))
+    // a gate that is off drops nothing
+    def drops(gate: Option[DataFrame], test: => Column): Column =
+      if (gate.isDefined) test else lit(false)
+    (Seq(exactDups.select(col("doc_id")).withColumn("__exact", lit(1)),
+        nearDups.select(col("doc_id")).withColumn("__near", lit(1)), quality, lang) ++
+      Seq(contaminated, repetition, gopher, classifier, lm).flatten)
+      .foldLeft(docs.select(col("doc_id"), col("text")))(_.join(_, Seq("doc_id"), "left"))
+      .withColumn("quality", coalesce(col("quality"), lit(0.0)))
+      .withColumn("n_tokens", coalesce(col("n_tokens"), lit(0L)))
+      .withColumn("drop_reason",
+        when(col("__exact").isNotNull, lit("exact_dup"))
+          .when(col("__near").isNotNull, lit("near_dup"))
+          .when(drops(contaminated, col("__contam").isNotNull), lit("contaminated"))
+          .when(drops(repetition,
+            coalesce(col("dup_3gram_frac"), lit(0.0)) > g.maxDup3Frac), lit("repetitive"))
+          .when(drops(gopher, not(coalesce(col("__goph_keep"), lit(false)))),
+            lit("gopher_rules"))
+          .when(drops(classifier, not(coalesce(col("__cls_keep"), lit(false)))),
+            lit("classifier"))
+          .when(drops(lm, not(coalesce(col("__lm_keep"), lit(true)))), lit("lm_fluency"))
+          .when(col("quality") < g.minQuality, lit("low_quality"))
+          .when(col("pred_lang") === "und", lit("unknown_lang"))
+          .otherwise(lit("kept")))
+      .select(col("doc_id"), col("text"), col("pred_lang"), col("quality"),
+        col("n_tokens"), col("drop_reason"))
+  }
+
+  /** The pipeline over an arbitrary (doc_id, text) frame, with the gate
+    * chain `gates` (see [[Gates]]).
     *
     * @param nearDup near-dup policy (see NearDupPolicy): PairwiseDrop
     *   (default — MinHash pairs, drop doc_b), ClusterKeeper (transitive
     *   CC, min-id keeper — the policy a production corpus dedup wants),
-    *   or ExactJaccard (recall-lossless n-gram join, drop doc_b — for
-    *   corpora where probabilistic recall is not enough). All three are
-    *   oracle-checked end-to-end (t_curate_stats /
-    *   t_curate_stats_clustered / t_curate_stats_exact).
-    * @param benchmark when set, docs sharing any `contaminationN`-token
-    *   shingle with this table are dropped as `contaminated`
-    *   (TextAnalysis.contaminationTable — the pre-training eval-leak
-    *   gate). Off by default.
-    * @param maxDup3Frac docs whose duplicate-3-gram fraction
-    *   (TextAnalysis.repetitionScore) exceeds this are dropped as
-    *   `repetitive` (the Gopher repetition filter). 1.0 disables (the
-    *   fraction is strictly < 1). Off by default.
-    * @param gopher when set, docs failing any Gopher/MassiveText rule
-    *   (see [[GopherGate]]) are dropped as `gopher_rules` — after the
-    *   repetition gate, before the learned classifier. Off by default.
-    * @param classifier when set, docs the trained model scores <= 0 are
-    *   dropped as `classifier` (see [[ClassifierGate]]) — after the
-    *   gopher gate, before the heuristic quality score. Off by
-    *   default.
-    * @param lm when set, docs whose bigram-LM fluency score falls below
-    *   the gate's minMicroAvg are dropped as `lm_fluency` (see
-    *   [[LmGate]]) — after the classifier gate, before the heuristic
-    *   quality score. Off by default.
-    * @param stripHtml when true, TextAnalysis.stripHtml runs FIRST
-    *   (before the PII scrub — extraction precedes scrubbing): two docs
-    *   differing only in markup ARE duplicates once it's gone, and no
-    *   gate or registry may see tags/entities. Map-side and per-doc, so
-    *   the streaming twin is batching-independent.
-    * @param redactPii when true, TextAnalysis.redactPii scrubs every doc
-    *   BEFORE any gate runs (the real-world order: fingerprints, shingles
-    *   and quality scores must reflect the text that ships, and two docs
-    *   differing only in the PII they leak ARE duplicates after the
-    *   scrub). A map-side per-doc transform, so it composes with the
-    *   streaming twin batching-independently. Off by default.
-    * @param excise when set, SURGICAL decontamination runs as the LAST
-    *   pre-transform (after stripHtml/redactPii/stripLineFreq, before
-    *   the token binding): every `exciseN`-token shingle shared with
-    *   this benchmark table is EXCISED from the text
-    *   (TextAnalysis.decontaminateSpans, character-offset excision in
-    *   BOTH modes — `preserveStructure`, round 12: shipped text differs
-    *   from lower_root(original) ONLY inside excised ranges, so
-    *   punctuation/line structure survives in latin mode too instead of
-    *   the token rebuild's space-normalized form), and the pipeline
-    *   ingests the excised text, so fingerprints, shingles, quality and
-    *   every gate see the text that ships. The softer alternative to the
-    *   doc-dropping `benchmark` gate (dropping a 100-page doc for one
-    *   leaked eval question wastes the other 99 pages); the two compose
-    *   — excise first, and still drop docs the gate finds contaminated
-    *   AFTER excision. Docs differing only inside excised spans (or only
-    *   by case) MAY become exact duplicates — that is the point, not an
-    *   artifact. Per-doc against a static benchmark, so the streaming
-    *   twin is batching-independent.
+    *   ExactJaccard (recall-lossless n-gram join, drop doc_b — for
+    *   corpora where probabilistic recall is not enough), or Containment.
+    *   Oracle-checked end-to-end (t_curate_stats /
+    *   t_curate_stats_clustered / t_curate_stats_exact /
+    *   t_curate_contained).
     * @param stripLineFreq when set, TextAnalysis.stripBoilerplate removes
     *   lines occurring in more than this many distinct docs BEFORE any
     *   gate runs (after the PII scrub if both are on — scrub first so
     *   line identity reflects shipped text): two docs differing only in
     *   shared boilerplate ARE duplicates once it's gone, and quality /
     *   repetition scores must not be propped up (or dragged down) by nav
-    *   bars. Corpus-level (hotness is a global count), so this pre-
-    *   transform exists ONLY in batch — a line can cross the threshold
-    *   after earlier micro-batches already shipped, which is why
-    *   [[graft.streaming.CurateStream]] deliberately has no twin flag. */
-  /** @param cjk mixed-script mode: binds `toks` ONCE on the persisted
-    *   corpus frame — through the FUSED `tokenize_array_cjk` kernel
-    *   (plans.TokenizeArrayCjk, one codegen'd linear scan; bit-parity
-    *   with the compositional tokens(text, cjk=true) pinned in
-    *   PlansSpec) — and the bound-toks reuse contract
-    *   (TextAnalysis.withToks / Dedup.shingleSets / contaminationGrams /
-    *   scoreLm) routes that one tokenization into quality, language,
-    *   decontamination, the LM gate, AND the near-dup shingle build — so
-    *   MinHash/Jaccard operate on CJK character bigrams exactly as the
-    *   CJK tokenizer mode pins them (u2_cjk_tokens), not on a latin
-    *   tokenization that strips CJK to nothing. The quality stop-rate
-    *   term gains the zhLexicon bigram arm (qualityScore cjk — the term
-    *   is otherwise constant 0 for pure-zh docs), a `benchmark` is
-    *   tokenized in the SAME mode (both sides of the contamination join
-    *   must see CJK grams), and the MODEL gates are mode-checked in both
-    *   directions (see [[requireGateModes]]): an `lm` model must be
-    *   trained on a reference bound via TokMode.bind(ref, cjk) and a
-    *   `classifier` weight table on a TokMode.bind-bound training frame
-    *   — mismatches (and untagged manual bindings) are refused loudly
-    *   BEFORE any work. The `gopher` gate is latin-only by design and
-    *   refused under cjk. Exact dedup (md5 fingerprint) is
-    *   script-agnostic either way. */
-  def runDocs(spark: SparkSession, documents: DataFrame, minQuality: Double = 0.55,
+    *   bars. Batch-only (see [[prepare]]), which is why
+    *   [[graft.streaming.CurateStream]] has no twin flag. */
+  def runDocs(spark: SparkSession, documents: DataFrame, gates: Gates = Gates(),
       nearDup: NearDupPolicy = NearDupPolicy.PairwiseDrop,
-      benchmark: Option[DataFrame] = None,
-      contaminationN: Int = 4, maxDup3Frac: Double = 1.0,
-      gopher: Option[GopherGate] = None,
-      classifier: Option[ClassifierGate] = None,
-      lm: Option[LmGate] = None,
-      stripHtml: Boolean = false,
-      redactPii: Boolean = false,
-      stripLineFreq: Option[Int] = None,
-      excise: Option[DataFrame] = None,
-      exciseN: Int = 4,
-      cjk: Boolean = false): (DataFrame, Stats) = {
-    requireGateModes(cjk, gopher, classifier, lm)
+      stripLineFreq: Option[Int] = None): (DataFrame, Stats) = {
     val dedupMark = Dedup.trackMark(spark)
-    // extraction precedes scrubbing: markup must be gone before PII
-    // patterns, line identity, or any fingerprint sees the text
-    val extracted =
-      if (stripHtml) TextAnalysis.stripHtml(documents)
-        .select(col("doc_id"), col("text"))
-      else documents
-    val scrubbed =
-      if (redactPii) TextAnalysis.redactPii(extracted)
-        .select(col("doc_id"), col("redacted").as("text"))
-      else extracted
-    val base0 = stripLineFreq match {
-      case Some(k) => TextAnalysis.stripBoilerplate(scrubbed, k)
-        .select(col("doc_id"), col("text"))
-      case None => scrubbed
-    }
-    // surgical decontamination LAST among the pre-transforms: spans must
-    // be located in the text that ships (post-scrub/strip), and every
-    // fingerprint/gate downstream must see the excised form. The excise
-    // benchmark is REBOUND in the pipeline's mode exactly like the
-    // `benchmark` gate's table (runLabeled): the operators honor a
-    // caller-bound `toks`, and a stray binding of a different
-    // tokenization must not leak through the pipeline entrance.
-    val base = excise match {
-      case Some(bx) => TextAnalysis.decontaminateSpans(base0,
-        graft.functions.TokMode.bind(bx, cjk), exciseN, cjk,
-        preserveStructure = true)
-        .select(col("doc_id"), col("text"))
-      case None => base0
-    }
-    // bind the tokenization BEFORE the persist so it runs once, not once
-    // per consumer — through the FUSED kernel for the mode (one codegen'd
-    // scan, null text → empty array). Latin mode binds too (round 10):
-    // the bound column is exactly what every consumer would compute
-    // (tokensFused(text) — quality, language, and the shingle build each
-    // re-ran that scan on the cached text), so the binding is a pure
-    // scan-count win: settled sf1 wall 5.6–5.9 → 4.0–4.3 s (−25–30%;
-    // tools/CurateCjkBench A/B, SCALE.md §Round-10, identical
-    // accounting). At 100 TB tokenization is the dominant map-side cost
-    // of the pipeline.
-    val withMode = graft.functions.TokMode.bind(base, cjk)
-    val docs = withMode.persist()
+    val docs = prepare(documents, gates, stripLineFreq).persist()
     // a mid-pipeline failure must still close the scope and drop this
     // run's caches (releaseSince after the happy-path release is a no-op)
-    try runLabeled(spark, docs, minQuality, nearDup, benchmark,
-      contaminationN, maxDup3Frac, gopher, classifier, lm, dedupMark, cjk)
+    try runLabeled(spark, docs, gates, nearDup, dedupMark)
     catch {
       case t: Throwable =>
         Dedup.releaseSince(spark, dedupMark)
@@ -308,11 +389,8 @@ object Curate {
     }
   }
 
-  private def runLabeled(spark: SparkSession, docs: DataFrame, minQuality: Double,
-      nearDup: NearDupPolicy, benchmark: Option[DataFrame], contaminationN: Int,
-      maxDup3Frac: Double, gopher: Option[GopherGate],
-      classifier: Option[ClassifierGate], lm: Option[LmGate],
-      dedupMark: Long, cjk: Boolean = false): (DataFrame, Stats) = {
+  private def runLabeled(spark: SparkSession, docs: DataFrame, gates: Gates,
+      nearDup: NearDupPolicy, dedupMark: Long): (DataFrame, Stats) = {
     // 1. exact dedup: keep the min doc_id of each fingerprint group
     val keepExact = Dedup.exactGroups(docs).select(col("keep_id").as("doc_id"))
     val afterExact = docs.join(keepExact, "doc_id")
@@ -335,105 +413,15 @@ object Curate {
           .select(col("doc_a").as("doc_id")).distinct()
     }
 
-    // 3. quality + language are per-row functions, so they are computed
-    // over the full cached corpus (map-side, one scan) — a dropped doc's
-    // row is simply never consulted because the drop_reason precedence
-    // below catches it first. LEFT join: zero-token docs have no quality
-    // row — coalesce them to quality 0 so they land in the lowQuality
-    // bucket instead of silently vanishing from the accounting.
-    val quality = TextAnalysis.qualityScore(docs, cjk)
-      .select(col("doc_id"), col("quality"), col("n_tokens"))
-    val lang = TextAnalysis.langId(docs).select(col("doc_id"), col("pred_lang"))
-
-    // optional per-doc gates, computed over the full corpus like
-    // quality/lang (precedence below decides who they actually drop).
-    // The benchmark is tokenized in the SAME mode as the corpus IN BOTH
-    // MODES (one mode-dispatched binding, tokensFused(text, cjk)): both
-    // sides of the contamination gram join must live in one token
-    // space, or overlap silently never fires — and binding only under
-    // cjk would still honor a stray caller-bound `toks` of a DIFFERENT
-    // tokenization on the latin path (contaminationGrams' bound-toks
-    // contract reads whatever column is there).
-    val contaminated = benchmark.map { b =>
-      val bb = graft.functions.TokMode.bind(b, cjk)
-      TextAnalysis.contaminationTable(docs, bb, contaminationN)
-        .select(col("doc_id")).withColumn("__contam", lit(1))
-    }
-    val repetition =
-      if (maxDup3Frac < 1.0)
-        Some(TextAnalysis.repetitionScore(docs)
-          .select(col("doc_id"), col("dup_3gram_frac")))
-      else None
-    // rule gate: gopherRules covers EVERY input doc (null text coalesces
-    // to ''), so __goph_keep is total
-    val gophPred = gopher.map(g =>
-      TextAnalysis.gopherRules(docs, g.minWords, g.maxWords, g.requiredStops)
-        .select(col("doc_id"), col("keep").as("__goph_keep")))
-    // model gate: scoreTokens covers EVERY input doc (it left-joins from
-    // docs and coalesces no-token scores to 0), so __cls_keep is total
-    val clsPred = classifier.map(cg =>
-      graft.operators.Classify.scoreTokens(docs, cg.weights, cg.buckets)
-        .select(col("doc_id"), col("pred").as("__cls_keep")))
-    // LM gate: scoreLm covers EVERY input doc (explode_outer keeps
-    // zero-bigram docs); NULL averages pass per the LmGate contract
-    val lmPred = lm.map(g =>
-      TextAnalysis.scoreLm(docs, g.model)
-        .select(col("doc_id"),
-          coalesce(col("lm_micro_avg") >= g.minMicroAvg, lit(true))
-            .as("__lm_keep")))
-
-    // ONE labeled frame over the whole input: every document carries the
-    // reason it left the pipeline (or 'kept'), so the ENTIRE accounting —
-    // every counter plus the kept-token sum — is one groupBy, one
-    // driver action, one pass over the scored corpus. The previous
-    // formulation ran six sequential driver actions (count x5 + agg) over
-    // the same cached frames; at 100 TB that is six passes where one does.
-    val joined = docs.select(col("doc_id"), col("text"))
-      .join(keepExact.withColumn("__keeper", lit(1)), Seq("doc_id"), "left")
-      .join(nearDupLosers.withColumn("__loser", lit(1)), Seq("doc_id"), "left")
-      .join(quality, Seq("doc_id"), "left")
-      .join(lang, Seq("doc_id"), "left")
-    val withGates = Seq(
-      contaminated.map(c => (df: DataFrame) => df.join(c, Seq("doc_id"), "left")),
-      repetition.map(r => (df: DataFrame) => df.join(r, Seq("doc_id"), "left")
-        .withColumn("dup_3gram_frac", coalesce(col("dup_3gram_frac"), lit(0.0)))),
-      gophPred.map(g => (df: DataFrame) => df.join(g, Seq("doc_id"), "left")),
-      clsPred.map(c => (df: DataFrame) => df.join(c, Seq("doc_id"), "left")),
-      lmPred.map(l => (df: DataFrame) => df.join(l, Seq("doc_id"), "left"))
-    ).flatten.foldLeft(joined)((df, f) => f(df))
-    val contamGate =
-      if (contaminated.isDefined) col("__contam").isNotNull else lit(false)
-    val repGate =
-      if (repetition.isDefined) col("dup_3gram_frac") > maxDup3Frac else lit(false)
-    val gophGate =
-      if (gopher.isDefined) not(coalesce(col("__goph_keep"), lit(false)))
-      else lit(false)
-    val clsGate =
-      if (classifier.isDefined) not(coalesce(col("__cls_keep"), lit(false)))
-      else lit(false)
-    val lmGateCol =
-      if (lm.isDefined) not(coalesce(col("__lm_keep"), lit(true)))
-      else lit(false)
-    val labeled = withGates
-      .withColumn("quality", coalesce(col("quality"), lit(0.0)))
-      .withColumn("n_tokens", coalesce(col("n_tokens"), lit(0L)))
-      .withColumn("drop_reason",
-        when(col("__keeper").isNull, lit("exact_dup"))
-          .when(col("__loser").isNotNull, lit("near_dup"))
-          .when(contamGate, lit("contaminated"))
-          .when(repGate, lit("repetitive"))
-          .when(gophGate, lit("gopher_rules"))
-          .when(clsGate, lit("classifier"))
-          .when(lmGateCol, lit("lm_fluency"))
-          .when(col("quality") < minQuality, lit("low_quality"))
-          .when(col("pred_lang") === "und", lit("unknown_lang"))
-          .otherwise(lit("kept")))
-      .drop((Seq("__keeper", "__loser") ++ contaminated.map(_ => "__contam")
-        ++ repetition.map(_ => "dup_3gram_frac")
-        ++ gophPred.map(_ => "__goph_keep")
-        ++ clsPred.map(_ => "__cls_keep")
-        ++ lmPred.map(_ => "__lm_keep")): _*)
-      .persist()
+    // 3. every gate, as ONE labeled frame over the whole input: every
+    // document carries the reason it left the pipeline (or 'kept'), so the
+    // ENTIRE accounting — every counter plus the kept-token sum — is one
+    // groupBy, one driver action, one pass over the scored corpus. The
+    // previous formulation ran six sequential driver actions (count x5 +
+    // agg) over the same cached frames; at 100 TB that is six passes where
+    // one does.
+    val exactDups = docs.select(col("doc_id")).join(keepExact, Seq("doc_id"), "left_anti")
+    val labeled = label(docs, gates, exactDups, nearDupLosers).persist()
     synchronized {
       tracked.filterInPlace((s, _) => !s.sparkContext.isStopped)
       tracked(spark) = tracked.getOrElse(spark, Vector.empty) :+ labeled
@@ -481,11 +469,7 @@ object Curate {
     val (curated, s) = run(spark, sfDir, minQuality)
     curated.write.mode("overwrite").parquet(outDir)
     releaseCaches(spark)
-    println(s"""{"input":${s.input},"exact_dups":${s.exactDups},"near_dups":${s.nearDups},""" +
-      s""""contaminated":${s.contaminated},"repetitive":${s.repetitive},""" +
-      s""""classifier_dropped":${s.classifierDropped},""" +
-      s""""low_quality":${s.lowQuality},"unknown_lang":${s.unknownLang},""" +
-      s""""kept":${s.kept},"kept_tokens":${s.keptTokens}}""")
+    println(statsJson(s))
     spark.stop()
   }
 }

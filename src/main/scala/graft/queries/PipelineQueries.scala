@@ -1536,7 +1536,7 @@ object PipelineQueries {
     * With `full = true` the decontamination (4-gram overlap vs the
     * doc_id % 23 benchmark slice) and repetition (dup-3-gram frac > 0.02)
     * gates are recomposed too, in the same precedence order as
-    * Curate.runLabeled: dedup → contaminated → repetitive → quality →
+    * Curate.label: dedup → contaminated → repetitive → quality →
     * language. */
   /** The classifier-gate CTE chain for the curate oracle: the SAME
     * train/score recomposition t_quality_classifier certifies (even-half
@@ -1814,8 +1814,8 @@ object PipelineQueries {
       .mkString(",\n                 ")}) v(doc_id, text)),"""
 
   /** The full curation pipeline in cjk mode, hash-gated end to end: the
-    * real corpus plus the CJK seeds flows through Curate.runDocs(cjk =
-    * true) — ONE fused CJK-bigram tokenization bound on the persisted
+    * real corpus plus the CJK seeds flows through Curate.runDocs(Gates(cjk
+    * = true)) — ONE fused CJK-bigram tokenization bound on the persisted
     * frame feeds MinHash shingles, quality (zh stop arm), and language —
     * and the DuckDB side recomposes the whole chain with [[TOKS_CJK]] in
     * the `$$TOKS` slot and the zh-extended stop set. Closes the round-9
@@ -1828,7 +1828,7 @@ object PipelineQueries {
     run = (s, dir) => {
       import s.implicits._
       val (_, st) = graft.pipeline.Curate.runDocs(s, curateCjkDocs(s, dir),
-        cjk = true)
+        graft.pipeline.Curate.Gates(cjk = true))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.lowQuality, st.unknownLang,
         st.kept, st.keptTokens))
@@ -1854,8 +1854,8 @@ object PipelineQueries {
       import s.implicits._
       val docs = curateCjkDocs(s, dir)
       val (_, st) = graft.pipeline.Curate.runDocs(s, docs,
-        benchmark = Some(docs.filter(col("doc_id") % 23 === 0)),
-        contaminationN = 4, maxDup3Frac = 0.02, cjk = true)
+        graft.pipeline.Curate.Gates(benchmark = Some(docs.filter(col("doc_id") % 23 === 0)),
+          contaminationN = 4, maxDup3Frac = 0.02, cjk = true))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.contaminated, st.repetitive,
         st.lowQuality, st.unknownLang, st.kept, st.keptTokens))
@@ -1892,7 +1892,8 @@ object PipelineQueries {
       val model = TextAnalysis.trainLm(graft.functions.TokMode.bind(
         docs.filter(col("doc_id") % 2 === 0), cjk = true))
       val (_, st) = graft.pipeline.Curate.runDocs(s, docs,
-        lm = Some(graft.pipeline.Curate.LmGate(model, 20000.0)), cjk = true)
+        graft.pipeline.Curate.Gates(lm = Some(graft.pipeline.Curate.LmGate(model, 20000.0)),
+          cjk = true))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.lmDropped, st.lowQuality,
         st.unknownLang, st.kept, st.keptTokens))
@@ -1942,8 +1943,8 @@ object PipelineQueries {
       val w = graft.operators.Classify.trainTokenWeights(train,
         coalesce(col("lang") === "en", lit(true)), buckets = 1024)
       val (_, st) = graft.pipeline.Curate.runDocs(s, docs,
-        classifier = Some(graft.pipeline.Curate.ClassifierGate(w, 1024)),
-        cjk = true)
+        graft.pipeline.Curate.Gates(
+          classifier = Some(graft.pipeline.Curate.ClassifierGate(w, 1024)), cjk = true))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.classifierDropped,
         st.lowQuality, st.unknownLang, st.kept, st.keptTokens))
@@ -1991,7 +1992,7 @@ object PipelineQueries {
       import s.implicits._
       val docs = Tables.documents(s, dir)
       val (_, st) = graft.pipeline.Curate.runDocs(s, docs,
-        excise = Some(docs.filter(col("doc_id") % 23 === 0)))
+        graft.pipeline.Curate.Gates(excise = Some(docs.filter(col("doc_id") % 23 === 0))))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.lowQuality, st.unknownLang,
         st.kept, st.keptTokens))
@@ -2015,7 +2016,8 @@ object PipelineQueries {
       import s.implicits._
       val docs = curateCjkDocs(s, dir)
       val (_, st) = graft.pipeline.Curate.runDocs(s, docs,
-        excise = Some(docs.filter(col("doc_id") % 23 === 0)), cjk = true)
+        graft.pipeline.Curate.Gates(excise = Some(docs.filter(col("doc_id") % 23 === 0)),
+          cjk = true))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.lowQuality, st.unknownLang,
         st.kept, st.keptTokens))
@@ -2107,8 +2109,8 @@ object PipelineQueries {
       import s.implicits._
       val docs = Tables.documents(s, dir)
       val (_, st) = graft.pipeline.Curate.runDocs(s, docs,
-        benchmark = Some(docs.filter(col("doc_id") % 23 === 0)),
-        contaminationN = 4, maxDup3Frac = 0.02)
+        graft.pipeline.Curate.Gates(benchmark = Some(docs.filter(col("doc_id") % 23 === 0)),
+          contaminationN = 4, maxDup3Frac = 0.02))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.contaminated, st.repetitive,
         st.lowQuality, st.unknownLang, st.kept, st.keptTokens))
@@ -2134,8 +2136,9 @@ object PipelineQueries {
     run = (s, dir) => {
       import s.implicits._
       val (_, st) = graft.pipeline.Curate.runDocs(s, Tables.documents(s, dir),
-        gopher = Some(graft.pipeline.Curate.GopherGate(minWords = 15, maxWords = 80,
-          requiredStops = Seq("the", "a", "of", "and", "to", "is"))))
+        graft.pipeline.Curate.Gates(gopher = Some(graft.pipeline.Curate.GopherGate(
+          minWords = 15, maxWords = 80,
+          requiredStops = Seq("the", "a", "of", "and", "to", "is")))))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.gopherDropped,
         st.lowQuality, st.unknownLang, st.kept, st.keptTokens))
@@ -2167,7 +2170,8 @@ object PipelineQueries {
       val w = graft.operators.Classify.trainTokenWeights(
         docs.filter(col("doc_id") % 2 === 0), col("lang") === "en", buckets = 1024)
       val (_, st) = graft.pipeline.Curate.runDocs(s, docs,
-        classifier = Some(graft.pipeline.Curate.ClassifierGate(w, 1024)))
+        graft.pipeline.Curate.Gates(
+          classifier = Some(graft.pipeline.Curate.ClassifierGate(w, 1024))))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.classifierDropped,
         st.lowQuality, st.unknownLang, st.kept, st.keptTokens))
@@ -2466,7 +2470,8 @@ object PipelineQueries {
     run = (s, dir) => {
       import s.implicits._
       val docs = Tables.documents(s, dir).select(col("doc_id"), htmlAugCol.as("text"))
-      val (_, st) = graft.pipeline.Curate.runDocs(s, docs, stripHtml = true)
+      val (_, st) = graft.pipeline.Curate.runDocs(s, docs,
+        graft.pipeline.Curate.Gates(stripHtml = true))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.lowQuality, st.unknownLang,
         st.kept, st.keptTokens))
@@ -3704,7 +3709,8 @@ object PipelineQueries {
     run = (s, dir) => {
       import s.implicits._
       val docs = Tables.documents(s, dir).select(col("doc_id"), piiAugCol.as("text"))
-      val (_, st) = graft.pipeline.Curate.runDocs(s, docs, redactPii = true)
+      val (_, st) = graft.pipeline.Curate.runDocs(s, docs,
+        graft.pipeline.Curate.Gates(redactPii = true))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.lowQuality, st.unknownLang,
         st.kept, st.keptTokens))
@@ -3933,7 +3939,7 @@ object PipelineQueries {
       val docs = Tables.documents(s, dir)
       val model = TextAnalysis.trainLm(docs.filter(col("doc_id") % 2 === 0))
       val (_, st) = graft.pipeline.Curate.runDocs(s, docs,
-        lm = Some(graft.pipeline.Curate.LmGate(model, 33000.0)))
+        graft.pipeline.Curate.Gates(lm = Some(graft.pipeline.Curate.LmGate(model, 33000.0))))
       graft.pipeline.Curate.releaseCaches(s)
       Seq((st.input, st.exactDups, st.nearDups, st.lmDropped, st.lowQuality,
         st.unknownLang, st.kept, st.keptTokens))

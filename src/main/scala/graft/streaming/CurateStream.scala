@@ -4,16 +4,17 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 import graft.operators.{Dedup, Sampling, TextAnalysis}
+import graft.pipeline.Curate
 
-/** Continuous curation: pipeline.Curate's full gate chain
-  * (exact dedup → MinHash near-dup removal → optional decontamination +
-  * repetition + classifier gates → quality → language) as ONE
-  * incremental sink. Every
-  * micro-batch document is labeled with the first gate that drops it (or
-  * 'kept') — the same precedence and drop rules as Curate.runLabeled — and
-  * the labeled rows land in `outPath/batch=<id>`, so the streaming
-  * accounting is the union of batch accountings.
+/** Continuous curation: pipeline.Curate's full gate chain as ONE
+  * incremental sink. Each micro-batch goes through Curate.prepare and
+  * Curate.label — the batch chain's own pre-transforms, gates and
+  * drop_reason precedence, configured by the same Curate.Gates value —
+  * and the labeled rows land in `outPath/batch=<id>`, so the streaming
+  * accounting is the union of batch accountings. Only dedup is the
+  * sink's own: it runs against the registry instead of the corpus.
   *
   * Cross-batch state is the same registry design as the other incremental
   * sinks (all under `registryPath`, every table in overwrite-idempotent
@@ -28,15 +29,19 @@ import graft.operators.{Dedup, Sampling, TextAnalysis}
   *  - `bands/` + `hashes/` — LSH bands and shingle-hash arrays of EXACT
   *    SURVIVORS only (the batch pipeline runs LSH on afterExact), dropped
   *    near-dups included so later near-dups of a dropped doc still drop.
+  * The registries hold fingerprints/bands of the PREPARED text (after
+  * stripHtml/redactPii/excise), so docs that differ only in what a
+  * pre-transform removes dedup together across batches too.
   *
   * Stream ≡ batch (StreamingSpec): on an id-ordered feed the union of
   * batch labels equals Curate.runDocs' accounting over the corpus-so-far
   * — same kept set, same per-reason counts, same kept-token sum — under
-  * the sub-cap bucket regime the other LSH sinks document. The
-  * decontamination gate uses the exact n-gram join against the STATIC
-  * benchmark (per-doc and batching-independent, like every other gate);
-  * swap in `decontaminationSink`'s broadcast-Bloom scoring when the
-  * corpus-side shuffle matters more than exactness.
+  * the sub-cap bucket regime the other LSH sinks document, at batch's
+  * MinHash settings (Dedup.Lsh). The decontamination gate uses the exact
+  * n-gram join against the STATIC benchmark (per-doc and
+  * batching-independent, like every other gate); swap in
+  * `decontaminationSink`'s broadcast-Bloom scoring when the corpus-side
+  * shuffle matters more than exactness.
   *
   * At scale, per batch: one fingerprint agg, one (b, band_key)-keyed
   * registry join, one gram-keyed contamination join vs a tiny benchmark,
@@ -45,69 +50,15 @@ import graft.operators.{Dedup, Sampling, TextAnalysis}
   */
 object CurateStream {
 
-  /** @param stripHtml when true, every micro-batch is HTML-stripped
-    *   FIRST (before the PII scrub — the batch chain's order). Per-doc
-    *   map-side regex, batching-independent; registries then hold
-    *   fingerprints/bands of the EXTRACTED text.
-    * @param gopher Gopher rule-set gate (docs failing any rule drop as
-    *   `gopher_rules`, after repetition, before the classifier — the
-    *   batch precedence). Per-doc map-side rules over static thresholds,
-    *   so the gate is batching-independent like quality/lang.
-    * @param classifier when set, the model gate runs per batch exactly as
-    *   in the batch chain (Curate.ClassifierGate): the weight table is a
-    *   STATIC broadcast side — train it once before starting the stream —
-    *   and scoring is per-doc, so the gate is batching-independent like
-    *   quality/lang and stream≡batch holds with the SAME weights on both
-    *   sides.
-    * @param lm bigram-LM fluency gate (docs below minMicroAvg drop as
-    *   `lm_fluency`) — the model is STATIC tables (TextAnalysis.trainLm,
-    *   run before starting the stream) and scoring is per-doc, so the
-    *   gate is batching-independent and stream≡batch holds with the SAME
-    *   model on both sides.
-    * @param redactPii when true, every micro-batch is PII-scrubbed
-    *   (TextAnalysis.redactPii) before any gate or registry write — the
-    *   batch chain's pre-transform. Per-doc and deterministic, so the
-    *   scrub is batching-independent and stream≡batch holds verbatim;
-    *   registries then hold fingerprints/bands OF THE SCRUBBED text,
-    *   which is the point (two docs differing only in leaked PII are
-    *   duplicates after the scrub).
-    * @param excise when set, SURGICAL decontamination runs as the last
-    *   pre-transform (Curate.runDocs' excise: shingles shared with this
-    *   STATIC benchmark are excised from the text; character-offset
-    *   excision in BOTH modes — structure-preserving, the runDocs
-    *   posture) — per-doc against fixed grams, so
-    *   batching-independent, and registries hold fingerprints/bands of
-    *   the EXCISED text: docs differing only around leaked eval spans
-    *   dedup together after excision, across batches too.
-    * @param cjk mixed-script mode (Curate.runDocs' cjk): binds `toks`
-    *   once on the persisted batch frame via the fused
-    *   `tokenize_array_cjk` kernel, so shingles/quality/language/
-    *   decontamination/LM scoring all read CJK character bigrams via the
-    *   bound-toks reuse contract; the quality stop-rate gains the
-    *   zhLexicon bigram arm, the `benchmark` is tokenized in the same
-    *   mode, and the model gates are mode-checked in both directions
-    *   (Curate.requireGateModes — train `lm`/`classifier` models on
-    *   TokMode.bind-bound frames matching this flag; `gopher` is
-    *   latin-only and refused under cjk). Per-doc and deterministic, so the
-    *   mode is batching-independent; registries then hold CJK-bigram
-    *   shingle hashes, matching the batch chain with the same flag. */
+  /** @param gates the gate chain (Curate.Gates; its mode contract is
+    *   checked when the value is built, before the stream starts). Model
+    *   tables (`classifier` weights, `lm` model) and benchmark tables are
+    *   read per micro-batch, so train them once before starting the stream
+    *   and persist them (or write and re-read): recomputing them per batch
+    *   is correct, just wasted work. Curate.runDocs' batch-only
+    *   `stripLineFreq` has no twin here (see Curate.prepare). */
   def sink(docs: DataFrame, registryPath: String, outPath: String,
-      benchmark: Option[DataFrame] = None, minQuality: Double = 0.55,
-      contaminationN: Int = 4, maxDup3Frac: Double = 1.0,
-      gopher: Option[graft.pipeline.Curate.GopherGate] = None,
-      classifier: Option[graft.pipeline.Curate.ClassifierGate] = None,
-      lm: Option[graft.pipeline.Curate.LmGate] = None,
-      stripHtml: Boolean = false,
-      redactPii: Boolean = false,
-      excise: Option[DataFrame] = None,
-      exciseN: Int = 4,
-      cjk: Boolean = false,
-      numSigs: Int = 8, rowsPerBand: Int = 2, threshold: Double = 0.8,
-      maxBucket: Int = 1000, compactEvery: Int = 16): DataStreamWriter[Row] = {
-    // same loud refusals as Curate.runDocs (one shared contract): LM and
-    // classifier models must match the pipeline's tokenization mode in
-    // BOTH directions, and the latin-only gopher gate is refused under cjk
-    graft.pipeline.Curate.requireGateModes(cjk, gopher, classifier, lm)
+      gates: Curate.Gates = Curate.Gates(), compactEvery: Int = 16): DataStreamWriter[Row] =
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
@@ -129,36 +80,11 @@ object CurateStream {
         // every frame persisted in this batch body lands here and is
         // released in the one finally — a failed batch must not leak
         // InMemoryRelations under the at-least-once retry contract
+        // (the excise pre-transform's registry-tracked persists release
+        // there too)
         val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
         def keep(df: DataFrame): DataFrame = { persisted += df.persist(); df }
-        val extracted =
-          if (stripHtml) TextAnalysis.stripHtml(batch.toDF())
-            .select(col("doc_id"), col("text"))
-          else batch.toDF()
-        val scrubbed =
-          if (redactPii) TextAnalysis.redactPii(extracted)
-            .select(col("doc_id"), col("redacted").as("text"))
-          else extracted
-        // bind the mode's tokenization before the persist — through the
-        // FUSED kernel (one codegen'd scan per batch, null text → empty
-        // array). Latin batches bind too (Curate.runDocs' round-10
-        // binding is identical): every gate reuses the one bound column
-        // instead of re-tokenizing the cached batch per consumer.
-        // surgical decontamination LAST among the pre-transforms
-        // (Curate.runDocs' order) — per-doc against the STATIC `excise`
-        // benchmark (REBOUND in the pipeline's mode, the runDocs
-        // posture — a stray caller binding must not leak through), so
-        // the transform is batching-independent like the scrub; its
-        // registry-tracked persists release in the finally
-        val preToks = excise match {
-          case Some(bx) => TextAnalysis
-            .decontaminateSpans(scrubbed,
-              graft.functions.TokMode.bind(bx, cjk), exciseN, cjk,
-              preserveStructure = true)
-            .select(col("doc_id"), col("text"))
-          case None => scrubbed
-        }
-        val b = keep(graft.functions.TokMode.bind(preToks, cjk))
+        val b = keep(Curate.prepare(batch.toDF(), gates))
         // NULL-text sentinel: fingerprint(NULL) is NULL, and the registry
         // equi-join below is null-UNSAFE — without the sentinel a null-text
         // doc in a later batch never matches a null-fp doc in the registry,
@@ -188,128 +114,52 @@ object CurateStream {
           // 2. near-dups among exact survivors: in-batch pairs + registry
           // verify, the minhashDedupSink shape over one shingle scan
           val sh = keep(Dedup.shingleSets(se))
-          val bands = keep(Dedup.bandsFromShingles(sh, numSigs, rowsPerBand))
-          locally {
-            val inBatch = Dedup.minhashPairsFromTables(sh, bands, threshold, maxBucket)
-              .select(col("doc_b").as("doc_id")).distinct()
-            val vBands = Registry.view(spark, registryPath, s"$registryPath/bands", batchId)
-            val vHashes = Registry.view(spark, registryPath, s"$registryPath/hashes", batchId)
-            // dirs above the watermark keep the both-tables-committed
-            // intersection; snapshots are jointly consistent by fold
-            val served = vBands.dirIds.intersect(vHashes.dirIds)
-            val crossLosers =
-              if (vBands.snapshotPath.isEmpty && served.isEmpty)
-                b.select(col("doc_id")).limit(0)
-              else {
-                val regBands = spark.read
-                  .parquet(vBands.pathsFor(served): _*)
-                  .select(col("doc_id").as("doc_a"), col("b"), col("band_key")).persist()
-                try {
-                  val hotKeys = regBands.groupBy(col("b"), col("band_key"))
-                    .agg(count(lit(1)).as("__bs")).filter(col("__bs") > maxBucket)
-                    .select(col("b"), col("band_key"))
-                  val cand = bands.join(regBands, Seq("b", "band_key"))
-                    .join(hotKeys, Seq("b", "band_key"), "left_anti")
-                    .select(col("doc_a"), col("doc_id").as("doc_b")).distinct()
-                  val regHashes = spark.read
-                    .parquet(vHashes.pathsFor(served): _*)
-                    .select(col("doc_id").as("doc_a"), col("hashes").as("h_a"))
-                  Dedup.jaccardVerify(cand, regHashes,
-                      sh.select(col("doc_id").as("doc_b"), col("hashes").as("h_b")),
-                      threshold)
-                    .select(col("doc_b").as("doc_id")).distinct()
-                    .localCheckpoint(true)
-                } finally { regBands.unpersist(blocking = false); () }
-              }
-            val nearDropped = inBatch.union(crossLosers).distinct()
-
-            // 3. per-doc gates (batching-independent), Curate's precedence
-            val quality = TextAnalysis.qualityScore(b, cjk)
-              .select(col("doc_id"), col("quality"), col("n_tokens"))
-            val lang = TextAnalysis.langId(b).select(col("doc_id"), col("pred_lang"))
-            // tokenize the STATIC benchmark in the same mode as the
-            // batch, in BOTH modes (Curate.runLabeled's contract — both
-            // sides of the contamination gram join must live in one
-            // token space; binding only under cjk would honor a stray
-            // differently-tokenized `toks` column on the latin path)
-            val contam = benchmark.map { bench =>
-              val bb = graft.functions.TokMode.bind(bench, cjk)
-              TextAnalysis.contaminationTable(b, bb, contaminationN)
-                .select(col("doc_id")).withColumn("__contam", lit(1))
+          val bands = keep(Dedup.bandsFromShingles(sh))
+          val inBatch = Dedup.minhashPairsFromTables(sh, bands,
+            Dedup.Lsh.Threshold, Dedup.Lsh.MaxBucket)
+            .select(col("doc_b").as("doc_id")).distinct()
+          val vBands = Registry.view(spark, registryPath, s"$registryPath/bands", batchId)
+          val vHashes = Registry.view(spark, registryPath, s"$registryPath/hashes", batchId)
+          // dirs above the watermark keep the both-tables-committed
+          // intersection; snapshots are jointly consistent by fold
+          val served = vBands.dirIds.intersect(vHashes.dirIds)
+          val crossLosers =
+            if (vBands.snapshotPath.isEmpty && served.isEmpty)
+              b.select(col("doc_id")).limit(0)
+            else {
+              val regBands = spark.read
+                .parquet(vBands.pathsFor(served): _*)
+                .select(col("doc_id").as("doc_a"), col("b"), col("band_key")).persist()
+              try {
+                val hotKeys = regBands.groupBy(col("b"), col("band_key"))
+                  .agg(count(lit(1)).as("__bs")).filter(col("__bs") > Dedup.Lsh.MaxBucket)
+                  .select(col("b"), col("band_key"))
+                val cand = bands.join(regBands, Seq("b", "band_key"))
+                  .join(hotKeys, Seq("b", "band_key"), "left_anti")
+                  .select(col("doc_a"), col("doc_id").as("doc_b")).distinct()
+                val regHashes = spark.read
+                  .parquet(vHashes.pathsFor(served): _*)
+                  .select(col("doc_id").as("doc_a"), col("hashes").as("h_a"))
+                Dedup.jaccardVerify(cand, regHashes,
+                    sh.select(col("doc_id").as("doc_b"), col("hashes").as("h_b")),
+                    Dedup.Lsh.Threshold)
+                  .select(col("doc_b").as("doc_id")).distinct()
+                  .localCheckpoint(true)
+              } finally { regBands.unpersist(blocking = false); () }
             }
-            val rep =
-              if (maxDup3Frac < 1.0)
-                Some(TextAnalysis.repetitionScore(b)
-                  .select(col("doc_id"), col("dup_3gram_frac")))
-              else None
-            val goph = gopher.map(g =>
-              TextAnalysis.gopherRules(b, g.minWords, g.maxWords, g.requiredStops)
-                .select(col("doc_id"), col("keep").as("__goph_keep")))
-            val cls = classifier.map(cg =>
-              graft.operators.Classify.scoreTokens(b, cg.weights, cg.buckets)
-                .select(col("doc_id"), col("pred").as("__cls_keep")))
-            // static model tables → per-doc scoring is batching-independent
-            val lmp = lm.map(g =>
-              TextAnalysis.scoreLm(b, g.model)
-                .select(col("doc_id"),
-                  coalesce(col("lm_micro_avg") >= g.minMicroAvg, lit(true))
-                    .as("__lm_keep")))
-            val joined = b.select(col("doc_id"), col("text"))
-              .join(exactDropped.withColumn("__ex", lit(1)), Seq("doc_id"), "left")
-              .join(nearDropped.withColumn("__near", lit(1)), Seq("doc_id"), "left")
-              .join(quality, Seq("doc_id"), "left")
-              .join(lang, Seq("doc_id"), "left")
-            val withGates = Seq(
-              contam.map(c => (df: DataFrame) => df.join(c, Seq("doc_id"), "left")),
-              rep.map(r => (df: DataFrame) => df.join(r, Seq("doc_id"), "left")),
-              goph.map(g => (df: DataFrame) => df.join(g, Seq("doc_id"), "left")),
-              cls.map(c => (df: DataFrame) => df.join(c, Seq("doc_id"), "left")),
-              lmp.map(l => (df: DataFrame) => df.join(l, Seq("doc_id"), "left"))
-            ).flatten.foldLeft(joined)((df, f) => f(df))
-            val contamGate =
-              if (contam.isDefined) col("__contam").isNotNull else lit(false)
-            val repGate =
-              if (rep.isDefined) coalesce(col("dup_3gram_frac"), lit(0.0)) > maxDup3Frac
-              else lit(false)
-            val gophGate =
-              if (gopher.isDefined) not(coalesce(col("__goph_keep"), lit(false)))
-              else lit(false)
-            val clsGate =
-              if (classifier.isDefined) not(coalesce(col("__cls_keep"), lit(false)))
-              else lit(false)
-            val lmGate =
-              if (lm.isDefined) not(coalesce(col("__lm_keep"), lit(true)))
-              else lit(false)
-            val labeled = withGates
-              .withColumn("quality", coalesce(col("quality"), lit(0.0)))
-              .withColumn("n_tokens", coalesce(col("n_tokens"), lit(0L)))
-              .withColumn("drop_reason",
-                when(col("__ex").isNotNull, lit("exact_dup"))
-                  .when(col("__near").isNotNull, lit("near_dup"))
-                  .when(contamGate, lit("contaminated"))
-                  .when(repGate, lit("repetitive"))
-                  .when(gophGate, lit("gopher_rules"))
-                  .when(clsGate, lit("classifier"))
-                  .when(lmGate, lit("lm_fluency"))
-                  .when(col("quality") < minQuality, lit("low_quality"))
-                  .when(col("pred_lang") === "und", lit("unknown_lang"))
-                  .otherwise(lit("kept")))
-              .select(col("doc_id"), col("text"), col("pred_lang"),
-                col("quality"), col("n_tokens"), col("drop_reason"))
-
-            labeled.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-            fps.write.mode("overwrite").parquet(s"$registryPath/fps/batch=$batchId")
-            bands.write.mode("overwrite").parquet(s"$registryPath/bands/batch=$batchId")
-            sh.select(col("doc_id"), col("hashes"))
-              .write.mode("overwrite").parquet(s"$registryPath/hashes/batch=$batchId")
-          }
+          val nearDropped = inBatch.union(crossLosers).distinct()
+          Curate.label(b, gates, exactDropped, nearDropped)
+            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+          fps.write.mode("overwrite").parquet(s"$registryPath/fps/batch=$batchId")
+          bands.write.mode("overwrite").parquet(s"$registryPath/bands/batch=$batchId")
+          sh.select(col("doc_id"), col("hashes"))
+            .write.mode("overwrite").parquet(s"$registryPath/hashes/batch=$batchId")
         } finally {
           persisted.foreach(_.unpersist(blocking = false))
           Dedup.releaseSince(spark, dedupMark)
           ()
         }
       }
-  }
 
   /** Every label the sink has emitted so far — the streaming accounting
     * surface (union of batch accountings). Serves the compacted snapshot
@@ -321,11 +171,13 @@ object CurateStream {
   def labeledView(spark: org.apache.spark.sql.SparkSession, outPath: String): DataFrame = {
     val v = Registry.view(spark, outPath, outPath)
     if (v.isEmpty) {
-      import org.apache.spark.sql.types._
+      // Curate.label's output schema (analysis only, no job), nullable
+      // like every column read back from parquet
+      val none = spark.range(0)
+        .select(col("id").as("doc_id"), lit(null).cast("string").as("text"))
+      val labeled = Curate.label(none, Curate.Gates(), none, none).schema
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("pred_lang", StringType), StructField("quality", DoubleType),
-          StructField("n_tokens", LongType), StructField("drop_reason", StringType))))
+        StructType(labeled.map(_.copy(nullable = true))))
     } else
       spark.read.parquet(v.paths: _*)
         .select(col("doc_id"), col("text"), col("pred_lang"), col("quality"),

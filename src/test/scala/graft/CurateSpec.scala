@@ -33,9 +33,9 @@ class CurateSpec extends AnyFunSuite {
       (5L, words.drop(5).mkString(" ")),
       (9L, words.mkString(" ")))
       .toDF("doc_id", "text")
-    val (_, pairwise) = Curate.runDocs(spark, docs, minQuality = 0.0)
-    val (_, clustered) = Curate.runDocs(spark, docs, minQuality = 0.0,
-      nearDup = Curate.NearDupPolicy.ClusterKeeper)
+    val (_, pairwise) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.0))
+    val (_, clustered) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.0),
+        nearDup = Curate.NearDupPolicy.ClusterKeeper)
     assert(pairwise.nearDups === 1, s"pairwise: $pairwise")   // only doc 9
     assert(clustered.nearDups === 2, s"clustered: $clustered") // docs 5 and 9
     assert(pairwise.input === pairwise.nearDups + pairwise.lowQuality
@@ -55,8 +55,8 @@ class CurateSpec extends AnyFunSuite {
       (2L, (words.drop(2)).mkString(" ")),
       (3L, (100 to 140).map(i => s"z$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val (_, st) = Curate.runDocs(spark, docs, minQuality = 0.0,
-      nearDup = Curate.NearDupPolicy.ExactJaccard())
+    val (_, st) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.0),
+        nearDup = Curate.NearDupPolicy.ExactJaccard())
     assert(st.nearDups === 1, s"exact: $st")
     assert(st.input === st.nearDups + st.lowQuality + st.unknownLang
       + st.kept + st.exactDups)
@@ -72,8 +72,8 @@ class CurateSpec extends AnyFunSuite {
       (3L, "spam spam spam spam spam spam spam spam spam spam eggs ham"),      // repetitive only
       (4L, "the quick brown fox jumps over the lazy dog today and here"))      // clean
       .toDF("doc_id", "text")
-    val (_, st) = Curate.runDocs(spark, docs, minQuality = 0.0,
-      benchmark = Some(docs.filter(col("doc_id") === 1)), maxDup3Frac = 0.2)
+    val (_, st) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.0,
+        benchmark = Some(docs.filter(col("doc_id") === 1)), maxDup3Frac = 0.2))
     // doc 1 self-contaminates; doc 2 is both contaminated and repetitive
     // but the contamination gate comes FIRST; doc 3 only repetitive
     assert(st.contaminated === 2 && st.repetitive === 1, s"stats: $st")
@@ -85,14 +85,21 @@ class CurateSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, dir)
     def runFull() = Curate.runDocs(spark, docs,
-      benchmark = Some(docs.filter(col("doc_id") % 23 === 0)),
-      contaminationN = 4, maxDup3Frac = 0.02)._2
+      Curate.Gates(benchmark = Some(docs.filter(col("doc_id") % 23 === 0)), contaminationN = 4,
+        maxDup3Frac = 0.02))._2
     val st = runFull()
     assert(st.contaminated > 0) // benchmark members self-match
     assert(st.input === st.exactDups + st.nearDups + st.contaminated
       + st.repetitive + st.lowQuality + st.unknownLang + st.kept)
     assert(st === runFull())
     Curate.releaseCaches(spark)
+  }
+
+  test("CLI stats JSON carries every Stats counter under its snake_case key") {
+    val s = Curate.Stats(1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12)
+    assert(Curate.statsJson(s) === """{"input":1,"exact_dups":2,"near_dups":3,""" +
+      """"contaminated":4,"repetitive":5,"gopher_dropped":6,"classifier_dropped":7,""" +
+      """"lm_dropped":8,"low_quality":9,"unknown_lang":10,"kept":11,"kept_tokens":12}""")
   }
 
   test("accounting stats run in a single driver action") {
@@ -112,7 +119,7 @@ class CurateSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      val (_, s) = Curate.runDocs(spark, docs, minQuality = 0.1)
+      val (_, s) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.1))
       assert(s.input === 3 && s.exactDups === 1)
       // the listener bus is async — wait for the dispatch to drain
       val deadline = System.currentTimeMillis() + 10000
@@ -154,8 +161,8 @@ class CurateSpec extends AnyFunSuite {
       (11L, "bad ugly junk spam noise mess the and is done"),
       (12L, "bad ugly junk spam noise mess the and is done")) // exact dup of 11
       .toDF("doc_id", "text")
-    val (curated, st) = Curate.runDocs(spark, docs, minQuality = 0.0,
-      classifier = Some(Curate.ClassifierGate(w, 1024)))
+    val (curated, st) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.0,
+        classifier = Some(Curate.ClassifierGate(w, 1024))))
     // doc 12 is an exact dup (dedup precedes the model gate); doc 11 is
     // model-dropped; doc 10 scores positive and passes the en lexicon
     assert(st.exactDups === 1 && st.classifierDropped === 1 && st.kept === 1,
@@ -175,7 +182,7 @@ class CurateSpec extends AnyFunSuite {
           .otherwise(lit(""))).as("text"))
     // composition property: runDocs(redactPii = true) == runDocs over the
     // manually scrubbed frame (the pre-transform is exactly redactPii)
-    val (keptA, stA) = Curate.runDocs(spark, raw, redactPii = true)
+    val (keptA, stA) = Curate.runDocs(spark, raw, Curate.Gates(redactPii = true))
     val rowsA = keptA.collect().map(r => (r.getLong(0), r.getString(1))).toSet
     Curate.releaseCaches(spark)
     val scrubbed = graft.operators.TextAnalysis.redactPii(raw)
@@ -199,7 +206,8 @@ class CurateSpec extends AnyFunSuite {
         when(col("doc_id") % 5 === 0,
           concat(lit("\nmail me at u"), col("doc_id").cast("string"), lit("@b.co")))
           .otherwise(lit(""))).as("text"))
-    val (keptA, stA) = Curate.runDocs(spark, raw, redactPii = true, stripLineFreq = Some(5))
+    val (keptA, stA) = Curate.runDocs(spark, raw, Curate.Gates(redactPii = true),
+        stripLineFreq = Some(5))
     val rowsA = keptA.collect().map(r => (r.getLong(0), r.getString(1))).toSet
     Curate.releaseCaches(spark)
     // manual composition in the documented order: scrub THEN strip
@@ -229,7 +237,7 @@ class CurateSpec extends AnyFunSuite {
       (2L, "the quick brown fox jumps over the lazy dog and the cat and the bird today"),
       (3L, "der hund und die katze sind nicht der fisch und das brot und der mann hier"))
       .toDF("doc_id", "text")
-    val (curated, s) = Curate.runDocs(spark, docs, minQuality = 0.1)
+    val (curated, s) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.1))
     assert(s.input === 3)
     assert(s.input === s.exactDups + s.nearDups + s.lowQuality + s.unknownLang + s.kept)
     assert(s.lowQuality >= 1) // the tokenless doc
@@ -245,7 +253,7 @@ class CurateSpec extends AnyFunSuite {
     val raw = docs.unionByName(docs.filter(col("doc_id") % 4 === 0)
       .select((col("doc_id") + 500000L).as("doc_id"),
         concat(lit("<div><p>"), col("text"), lit("</p></div>")).as("text")))
-    val (keptA, stA) = Curate.runDocs(spark, raw, stripHtml = true)
+    val (keptA, stA) = Curate.runDocs(spark, raw, Curate.Gates(stripHtml = true))
     val rowsA = keptA.collect().map(r => (r.getLong(0), r.getString(1))).toSet
     Curate.releaseCaches(spark)
     val nWrapped = docs.filter(col("doc_id") % 4 === 0).count()
@@ -265,7 +273,7 @@ class CurateSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val bench = docs.filter(col("doc_id") % 23 === 0)
-    val (keptA, stA) = Curate.runDocs(spark, docs, excise = Some(bench))
+    val (keptA, stA) = Curate.runDocs(spark, docs, Curate.Gates(excise = Some(bench)))
     val rowsA = keptA.collect().map(r => (r.getLong(0), r.getString(1))).toSet
     Curate.releaseCaches(spark)
     // composition property: runDocs(excise = b) == runDocs over the
@@ -312,8 +320,8 @@ class CurateSpec extends AnyFunSuite {
     // and THROUGH the pipeline: kept docs carry the structure-preserved
     // form (doc 1 ships with its punctuation and newline; minQuality
     // relaxed — the stop-heavy fixture scores ~0.53 on the tiny lexicons)
-    val (kept, _) = Curate.runDocs(spark, docs, minQuality = 0.3,
-      excise = Some(bench), exciseN = 3)
+    val (kept, _) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.3,
+        excise = Some(bench), exciseN = 3))
     val keptRows = kept.select(col("doc_id"), col("text"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     Curate.releaseCaches(spark)
@@ -333,12 +341,12 @@ class CurateSpec extends AnyFunSuite {
     // the pipeline entrance rebinds, so stray == raw, and excision fires
     val strayBound = bench.withColumn("toks",
       graft.functions.TextFunctions.tokensFused(col("text")))
-    val (a, stA) = Curate.runDocs(spark, docs, minQuality = 0.0,
-      excise = Some(bench), cjk = true)
+    val (a, stA) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.0,
+        excise = Some(bench), cjk = true))
     val rowsA = a.collect().map(r => (r.getLong(0), r.getString(1))).toSet
     Curate.releaseCaches(spark)
-    val (b, stB) = Curate.runDocs(spark, docs, minQuality = 0.0,
-      excise = Some(strayBound), cjk = true)
+    val (b, stB) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.0,
+        excise = Some(strayBound), cjk = true))
     val rowsB = b.collect().map(r => (r.getLong(0), r.getString(1))).toSet
     Curate.releaseCaches(spark)
     assert(stA === stB)
@@ -362,12 +370,12 @@ class CurateSpec extends AnyFunSuite {
     assert(latinModel.tokMode === TokMode.Latin)
     val gate = Some(Curate.LmGate(latinModel, 33000.0))
     val e = intercept[IllegalArgumentException] {
-      Curate.runDocs(spark, docs, lm = gate, cjk = true)
+      Curate.runDocs(spark, docs, Curate.Gates(lm = gate, cjk = true))
     }
     assert(e.getMessage.contains("does not match the pipeline mode 'cjk'"))
     val e2 = intercept[IllegalArgumentException] {
       graft.streaming.CurateStream.sink(docs, "/tmp/never", "/tmp/never",
-        lm = gate, cjk = true)
+        Curate.Gates(lm = gate, cjk = true))
     }
     assert(e2.getMessage.contains("does not match the pipeline mode 'cjk'"))
     Curate.releaseCaches(spark)
@@ -375,15 +383,15 @@ class CurateSpec extends AnyFunSuite {
     // tag, trainLm records it)
     val cjkModel = T.trainLm(TokMode.bind(ref, cjk = true))
     assert(cjkModel.tokMode === TokMode.Cjk)
-    val (_, st) = Curate.runDocs(spark, docs, minQuality = 0.0,
-      lm = Some(Curate.LmGate(cjkModel, 0.0)), cjk = true)
+    val (_, st) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.0,
+        lm = Some(Curate.LmGate(cjkModel, 0.0)), cjk = true))
     Curate.releaseCaches(spark)
     assert(st.input === 1L)
     // ...and the OTHER direction is refused too: a cjk-trained model
     // under the latin pipeline shares no vocab with latin token streams
     // (the round-10 boolean guard passed this case silently)
     val e3 = intercept[IllegalArgumentException] {
-      Curate.runDocs(spark, docs, lm = Some(Curate.LmGate(cjkModel, 0.0)))
+      Curate.runDocs(spark, docs, Curate.Gates(lm = Some(Curate.LmGate(cjkModel, 0.0))))
     }
     assert(e3.getMessage.contains("does not match the pipeline mode 'latin'"))
     // an untagged manual binding proves nothing about its mode: refused
@@ -395,7 +403,7 @@ class CurateSpec extends AnyFunSuite {
     for (mode <- Seq(true, false)) {
       val eu = intercept[IllegalArgumentException] {
         Curate.runDocs(spark, docs,
-          lm = Some(Curate.LmGate(unknownModel, 0.0)), cjk = mode)
+          Curate.Gates(lm = Some(Curate.LmGate(unknownModel, 0.0)), cjk = mode))
       }
       assert(eu.getMessage.contains("'unknown'"))
     }
@@ -419,23 +427,23 @@ class CurateSpec extends AnyFunSuite {
     // pure-CJK docs 0 and silently drops the whole zh corpus)
     val e = intercept[IllegalArgumentException] {
       Curate.runDocs(spark, docs,
-        classifier = Some(Curate.ClassifierGate(latinW, 64)), cjk = true)
+        Curate.Gates(classifier = Some(Curate.ClassifierGate(latinW, 64)), cjk = true))
     }
     assert(e.getMessage.contains("does not match the pipeline mode 'cjk'"))
     // cjk weights under latin: refused (disjoint token space)
     val e2 = intercept[IllegalArgumentException] {
       Curate.runDocs(spark, docs,
-        classifier = Some(Curate.ClassifierGate(cjkW, 64)))
+        Curate.Gates(classifier = Some(Curate.ClassifierGate(cjkW, 64))))
     }
     assert(e2.getMessage.contains("does not match the pipeline mode 'latin'"))
     // matched modes pass on both arms (and the streaming entry shares
     // the guard — one spot check)
-    val (_, st) = Curate.runDocs(spark, docs, minQuality = 0.0,
-      classifier = Some(Curate.ClassifierGate(latinW, 64)))
+    val (_, st) = Curate.runDocs(spark, docs, Curate.Gates(minQuality = 0.0,
+        classifier = Some(Curate.ClassifierGate(latinW, 64))))
     assert(st.input === 1L)
     val e3 = intercept[IllegalArgumentException] {
       graft.streaming.CurateStream.sink(docs, "/tmp/never", "/tmp/never",
-        classifier = Some(Curate.ClassifierGate(latinW, 64)), cjk = true)
+        Curate.Gates(classifier = Some(Curate.ClassifierGate(latinW, 64)), cjk = true))
     }
     assert(e3.getMessage.contains("does not match the pipeline mode 'cjk'"))
     Curate.releaseCaches(spark)
@@ -448,12 +456,12 @@ class CurateSpec extends AnyFunSuite {
     // every zh doc would fail r_wordcount/r_stops and drop as
     // gopher_rules — the hazard is refused, not silently allowed
     val e = intercept[IllegalArgumentException] {
-      Curate.runDocs(spark, docs, gopher = Some(Curate.GopherGate()), cjk = true)
+      Curate.runDocs(spark, docs, Curate.Gates(gopher = Some(Curate.GopherGate()), cjk = true))
     }
     assert(e.getMessage.contains("latin-only"))
     val e2 = intercept[IllegalArgumentException] {
       graft.streaming.CurateStream.sink(docs, "/tmp/never", "/tmp/never",
-        gopher = Some(Curate.GopherGate()), cjk = true)
+        Curate.Gates(gopher = Some(Curate.GopherGate()), cjk = true))
     }
     assert(e2.getMessage.contains("latin-only"))
     Curate.releaseCaches(spark)

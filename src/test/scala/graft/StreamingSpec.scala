@@ -460,7 +460,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = MemoryStream[(Long, String)]
     val q = graft.streaming.CurateStream.sink(
         stream.toDF().toDF("doc_id", "text"), regPath, outPath,
-        benchmark = Some(bench), maxDup3Frac = 0.02)
+        graft.pipeline.Curate.Gates(benchmark = Some(bench), maxDup3Frac = 0.02))
       .start()
     val batches = docRows.grouped(math.max(1, docRows.size / 3)).toSeq
     batches.foreach { h => stream.addData(h); q.processAllAvailable() }
@@ -475,7 +475,7 @@ class StreamingSpec extends AnyFunSuite {
       .agg(sum("n_tokens")).first().getLong(0)
     // batch twin: the full Curate pipeline with the same gates
     val (curated, st) = graft.pipeline.Curate.runDocs(spark, docs,
-      benchmark = Some(bench), maxDup3Frac = 0.02)
+      graft.pipeline.Curate.Gates(benchmark = Some(bench), maxDup3Frac = 0.02))
     val wantKept = curated.select("doc_id").collect().map(_.getLong(0)).toSet
     graft.pipeline.Curate.releaseCaches(spark)
     assert(st.exactDups > 0 || st.nearDups > 0, "no dups — dedup path vacuous")
@@ -491,6 +491,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(gotTokens === st.keptTokens)
   }
 
+  test("CurateStream labeledView with no committed batch: 0 rows, the populated view's schema") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val regPath = SparkTestSession.scratch("curatestream_emptyview_reg")
+    val outPath = SparkTestSession.scratch("curatestream_emptyview_out")
+    // an in-flight batch dir (no _SUCCESS) does not count as committed
+    new java.io.File(s"$outPath/batch=5").mkdirs()
+    val empty = graft.streaming.CurateStream.labeledView(spark, outPath)
+    assert(empty.count() === 0)
+    val stream = MemoryStream[(Long, String)]
+    val q = graft.streaming.CurateStream.sink(
+        stream.toDF().toDF("doc_id", "text"), regPath, outPath)
+      .start()
+    stream.addData((1L, "the cat sat on the mat and the dog ran"))
+    q.processAllAvailable()
+    q.stop()
+    val populated = graft.streaming.CurateStream.labeledView(spark, outPath)
+    assert(populated.count() === 1)
+    assert(empty.schema === populated.schema)
+  }
+
   test("CurateStream redactPii == batch Curate with the scrub; registries hold scrubbed state") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -502,16 +523,25 @@ class StreamingSpec extends AnyFunSuite {
     // docs exact duplicates ONLY after redaction (same text, different
     // leaked email) — the property that breaks if the scrub runs after
     // the registry writes instead of before
-    val docs = Tables.documents(spark, dir).select(col("doc_id"),
+    val plain = Tables.documents(spark, dir).select(col("doc_id"),
       concat(col("text"),
         when(col("doc_id") % 4 === 0,
           concat(lit(" contact user"), col("doc_id").cast("string"), lit("@x.io")))
           .otherwise(lit(""))).as("text"))
+    // and markup-wrapped copies (shifted ids: they stream in the last
+    // batch) that are exact dups of their originals only once stripHtml
+    // has run before the registry writes — the same property for the
+    // extraction pre-transform
+    val docs = plain.unionByName(plain.filter(col("doc_id") % 5 === 0)
+      .select((col("doc_id") + 500000L).as("doc_id"),
+        concat(lit("<div><script>var x = 1;</script><p>"), col("text"),
+          lit("</p></div>")).as("text")))
     val docRows = docs.orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val stream = MemoryStream[(Long, String)]
     val q = graft.streaming.CurateStream.sink(
-        stream.toDF().toDF("doc_id", "text"), regPath, outPath, redactPii = true)
+        stream.toDF().toDF("doc_id", "text"), regPath, outPath,
+        graft.pipeline.Curate.Gates(stripHtml = true, redactPii = true))
       .start()
     docRows.grouped(math.max(1, docRows.size / 3)).foreach { h =>
       stream.addData(h); q.processAllAvailable()
@@ -522,7 +552,8 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val gotKept = labeled.filter(col("drop_reason") === "kept")
       .select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val (curated, st) = graft.pipeline.Curate.runDocs(spark, docs, redactPii = true)
+    val (curated, st) = graft.pipeline.Curate.runDocs(spark, docs,
+        graft.pipeline.Curate.Gates(stripHtml = true, redactPii = true))
     val wantKept = curated.select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     graft.pipeline.Curate.releaseCaches(spark)
@@ -533,6 +564,9 @@ class StreamingSpec extends AnyFunSuite {
     // the emitted corpus is scrubbed
     assert(gotKept.nonEmpty)
     assert(!gotKept.exists(_._2.contains("@x.io")))
+    // every wrapped copy dedups against its (earlier-batch) original
+    assert(labeled.filter(col("doc_id") >= 500000L && col("drop_reason") =!= "exact_dup")
+      .count() === 0)
     // and the fingerprint registry holds scrubbed fingerprints: re-running
     // the scrub on the raw docs reproduces every registered fp
     val regFps = spark.read.parquet(s"$regPath/fps/batch=0").select("fp")
@@ -607,7 +641,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = MemoryStream[(Long, String)]
     val q = graft.streaming.CurateStream.sink(
         stream.toDF().toDF("doc_id", "text"), regPath, outPath,
-        minQuality = 0.0, gopher = gate)
+        graft.pipeline.Curate.Gates(minQuality = 0.0, gopher = gate))
       .start()
     docRows.sortBy(_._1).grouped(4).foreach { h =>
       stream.addData(h); q.processAllAvailable()
@@ -617,7 +651,7 @@ class StreamingSpec extends AnyFunSuite {
     val gotLabels = labeled.select("doc_id", "drop_reason").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val (curated, st) = graft.pipeline.Curate.runDocs(spark, docs,
-      minQuality = 0.0, gopher = gate)
+      graft.pipeline.Curate.Gates(minQuality = 0.0, gopher = gate))
     val wantKept = curated.select("doc_id").collect().map(_.getLong(0)).toSet
     graft.pipeline.Curate.releaseCaches(spark)
     assert(st.gopherDropped > 0 && st.exactDups > 0 && st.kept > 0,
@@ -652,7 +686,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = MemoryStream[(Long, String)]
     val q = graft.streaming.CurateStream.sink(
         stream.toDF().toDF("doc_id", "text"), regPath, outPath,
-        minQuality = 0.0, classifier = gate)
+        graft.pipeline.Curate.Gates(minQuality = 0.0, classifier = gate))
       .start()
     docRows.sortBy(_._1).grouped(4).foreach { h =>
       stream.addData(h); q.processAllAvailable()
@@ -662,7 +696,7 @@ class StreamingSpec extends AnyFunSuite {
     val gotLabels = labeled.select("doc_id", "drop_reason").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val (curated, st) = graft.pipeline.Curate.runDocs(spark, docs,
-      minQuality = 0.0, classifier = gate)
+      graft.pipeline.Curate.Gates(minQuality = 0.0, classifier = gate))
     val wantKept = curated.select("doc_id").collect().map(_.getLong(0)).toSet
     graft.pipeline.Curate.releaseCaches(spark)
     assert(st.classifierDropped > 0 && st.exactDups > 0 && st.kept > 0,
@@ -696,7 +730,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = MemoryStream[(Long, String)]
     val q = graft.streaming.CurateStream.sink(
         stream.toDF().toDF("doc_id", "text"), regPath, outPath,
-        minQuality = 0.0, lm = gate)
+        graft.pipeline.Curate.Gates(minQuality = 0.0, lm = gate))
       .start()
     docRows.sortBy(_._1).grouped(4).foreach { h =>
       stream.addData(h); q.processAllAvailable()
@@ -706,7 +740,7 @@ class StreamingSpec extends AnyFunSuite {
     val gotLabels = labeled.select("doc_id", "drop_reason").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val (curated, st) = graft.pipeline.Curate.runDocs(spark, docs,
-      minQuality = 0.0, lm = gate)
+      graft.pipeline.Curate.Gates(minQuality = 0.0, lm = gate))
     val wantKept = curated.select("doc_id").collect().map(_.getLong(0)).toSet
     graft.pipeline.Curate.releaseCaches(spark)
     assert(st.lmDropped > 0 && st.exactDups > 0 && st.kept > 0, s"gate vacuous: $st")
@@ -738,7 +772,7 @@ class StreamingSpec extends AnyFunSuite {
     val docs = docRows.toDF("doc_id", "text")
     // batch chain, cjk mode
     val (curated, st) = graft.pipeline.Curate.runDocs(spark, docs,
-      minQuality = 0.0, cjk = true)
+      graft.pipeline.Curate.Gates(minQuality = 0.0, cjk = true))
     val keptBatch = curated.select("doc_id", "pred_lang").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
@@ -749,8 +783,8 @@ class StreamingSpec extends AnyFunSuite {
     // to re-tokenize latin-fused and silently miss every CJK near dup —
     // worst on the policy marketed as recall-lossless)
     val (_, stJ) = graft.pipeline.Curate.runDocs(spark, docs,
-      minQuality = 0.0, cjk = true,
-      nearDup = graft.pipeline.Curate.NearDupPolicy.ExactJaccard(3, 0.8))
+      graft.pipeline.Curate.Gates(minQuality = 0.0, cjk = true),
+        nearDup = graft.pipeline.Curate.NearDupPolicy.ExactJaccard(3, 0.8))
     graft.pipeline.Curate.releaseCaches(spark)
     assert(stJ.nearDups === 1L && stJ.exactDups === 1L,
       s"ExactJaccard under cjk mode: $stJ")
@@ -758,7 +792,7 @@ class StreamingSpec extends AnyFunSuite {
     // no shingles, so the near dup is MISSED (doc 3 survives); zh docs
     // still predict zh (containment evidence reads the raw text)
     val (curated0, st0) = graft.pipeline.Curate.runDocs(spark, docs,
-      minQuality = 0.0, cjk = false)
+      graft.pipeline.Curate.Gates(minQuality = 0.0, cjk = false))
     val kept0 = curated0.select("doc_id").collect().map(_.getLong(0)).toSet
     graft.pipeline.Curate.releaseCaches(spark)
     assert(st0.nearDups === 0L && kept0.contains(3L),
@@ -767,7 +801,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = MemoryStream[(Long, String)]
     val q = graft.streaming.CurateStream.sink(
         stream.toDF().toDF("doc_id", "text"), regPath, outPath,
-        minQuality = 0.0, cjk = true)
+        graft.pipeline.Curate.Gates(minQuality = 0.0, cjk = true))
       .start()
     docRows.sortBy(_._1).grouped(2).foreach { h =>
       stream.addData(h); q.processAllAvailable()
@@ -814,8 +848,8 @@ class StreamingSpec extends AnyFunSuite {
     val gate = Some(graft.pipeline.Curate.LmGate(model, 50000.0))
     // batch, cjk mode: both gates fire on CJK evidence
     val (_, st) = graft.pipeline.Curate.runDocs(spark, docs,
-      minQuality = 0.0, benchmark = Some(bench), contaminationN = 4,
-      lm = gate, cjk = true)
+      graft.pipeline.Curate.Gates(minQuality = 0.0, benchmark = Some(bench), contaminationN = 4,
+        lm = gate, cjk = true))
     graft.pipeline.Curate.releaseCaches(spark)
     assert(st.contaminated === 1L && st.lmDropped === 1L && st.kept === 2L,
       s"cjk gates: $st")
@@ -827,13 +861,13 @@ class StreamingSpec extends AnyFunSuite {
     // (before, it passed silently and garbled doc 10 kept on a NULL
     // average) — pin the refusal instead.
     val eCtl = intercept[IllegalArgumentException] {
-      graft.pipeline.Curate.runDocs(spark, docs, minQuality = 0.0,
-        benchmark = Some(bench), contaminationN = 4, lm = gate, cjk = false)
+      graft.pipeline.Curate.runDocs(spark, docs, graft.pipeline.Curate.Gates(minQuality = 0.0,
+          benchmark = Some(bench), contaminationN = 4, lm = gate, cjk = false))
     }
     assert(eCtl.getMessage.contains("does not match the pipeline mode 'latin'"))
     val (_, st0) = graft.pipeline.Curate.runDocs(spark, docs,
-      minQuality = 0.0, benchmark = Some(bench), contaminationN = 4,
-      cjk = false)
+      graft.pipeline.Curate.Gates(minQuality = 0.0, benchmark = Some(bench), contaminationN = 4,
+        cjk = false))
     graft.pipeline.Curate.releaseCaches(spark)
     assert(st0.contaminated === 0L && st0.lmDropped === 0L,
       s"latin-mode control should be inert for CJK: $st0")
@@ -841,8 +875,8 @@ class StreamingSpec extends AnyFunSuite {
     val stream = MemoryStream[(Long, String)]
     val q = graft.streaming.CurateStream.sink(
         stream.toDF().toDF("doc_id", "text"), regPath, outPath,
-        benchmark = Some(bench), contaminationN = 4,
-        minQuality = 0.0, lm = gate, cjk = true)
+        graft.pipeline.Curate.Gates(benchmark = Some(bench), contaminationN = 4,
+        minQuality = 0.0, lm = gate, cjk = true))
       .start()
     docRows.sortBy(_._1).grouped(2).foreach { h =>
       stream.addData(h); q.processAllAvailable()
@@ -890,40 +924,52 @@ class StreamingSpec extends AnyFunSuite {
   test("CurateStream excise pre-transform == batch Curate (cjk character-offset excision across batches)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val regPath = SparkTestSession.scratch("curatestream_excise_reg")
-    val outPath = SparkTestSession.scratch("curatestream_excise_out")
-    val bench = Seq((900L, "机器学习模型训练")).toDF("doc_id", "text")
-    val docRows: Seq[(Long, String)] = Seq(
-      (7L, "我们使用机器学习模型训练数据完成任务"), // excised mid-doc, survivors keep
-      (9L, "我们可以一起去公园散步"), // clean zh
-      (10L, "机器学习模型训练"), // IS the benchmark → excises to empty
-      (11L, "the cat sat on the mat and the dog ran")) // latin, untouched
-    val docs = docRows.toDF("doc_id", "text")
-    val (curated, st) = graft.pipeline.Curate.runDocs(spark, docs,
-      minQuality = 0.0, excise = Some(bench), cjk = true)
-    val wantKept = curated.select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    graft.pipeline.Curate.releaseCaches(spark)
-    // live excision: doc 7's leaked span is gone but the doc SURVIVES
-    // (the surgical point), doc 10 empties and drops
-    assert(wantKept.contains(7L) && !wantKept(7L).contains("机器学习模型训练"),
-      s"kept: $wantKept")
-    assert(!wantKept.contains(10L), s"emptied doc must not keep: $st")
-    val stream = MemoryStream[(Long, String)]
-    val q = graft.streaming.CurateStream.sink(
-        stream.toDF().toDF("doc_id", "text"), regPath, outPath,
-        minQuality = 0.0, excise = Some(bench), cjk = true)
-      .start()
-    docRows.sortBy(_._1).grouped(2).foreach { h =>
-      stream.addData(h); q.processAllAvailable()
+    // one arm per tokenization mode; in each, doc 7 embeds the benchmark
+    // span mid-doc, doc 10 IS the benchmark, and doc 11 is in the other
+    // script (untouched by the mode's excision)
+    val arms: Seq[(Boolean, String, Seq[(Long, String)])] = Seq(
+      (true, "机器学习模型训练", Seq(
+        (7L, "我们使用机器学习模型训练数据完成任务"), // excised mid-doc, survivors keep
+        (9L, "我们可以一起去公园散步"), // clean zh
+        (10L, "机器学习模型训练"), // IS the benchmark → excises to empty
+        (11L, "the cat sat on the mat and the dog ran"))), // latin, untouched
+      (false, "the quick brown fox jumps over the lazy dog", Seq(
+        (7L, "we fed it data and the quick brown fox jumps over the lazy dog then it was done"),
+        (9L, "the cat and the dog went to the park for a walk"), // clean en
+        (10L, "the quick brown fox jumps over the lazy dog"), // IS the benchmark
+        (11L, "我们可以一起去公园散步")))) // zh, untouched
+    for ((cjk, span, docRows) <- arms) {
+      val arm = if (cjk) "" else "_latin"
+      val regPath = SparkTestSession.scratch(s"curatestream_excise${arm}_reg")
+      val outPath = SparkTestSession.scratch(s"curatestream_excise${arm}_out")
+      val bench = Seq((900L, span)).toDF("doc_id", "text")
+      val docs = docRows.toDF("doc_id", "text")
+      val (curated, st) = graft.pipeline.Curate.runDocs(spark, docs,
+        graft.pipeline.Curate.Gates(minQuality = 0.0, excise = Some(bench), cjk = cjk))
+      val wantKept = curated.select("doc_id", "text").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      graft.pipeline.Curate.releaseCaches(spark)
+      // live excision: doc 7's leaked span is gone but the doc SURVIVES
+      // (the surgical point), doc 10 empties and drops
+      assert(wantKept.contains(7L) && !wantKept(7L).contains(span),
+        s"kept: $wantKept")
+      assert(!wantKept.contains(10L), s"emptied doc must not keep: $st")
+      val stream = MemoryStream[(Long, String)]
+      val q = graft.streaming.CurateStream.sink(
+          stream.toDF().toDF("doc_id", "text"), regPath, outPath,
+          graft.pipeline.Curate.Gates(minQuality = 0.0, excise = Some(bench), cjk = cjk))
+        .start()
+      docRows.sortBy(_._1).grouped(2).foreach { h =>
+        stream.addData(h); q.processAllAvailable()
+      }
+      q.stop()
+      val labeled = graft.streaming.CurateStream.labeledView(spark, outPath)
+        .select("doc_id", "drop_reason", "text").collect()
+        .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
+      assert(labeled.size === docRows.size)
+      assert(labeled.filter(_._2._1 == "kept").view.mapValues(_._2).toMap === wantKept)
+      assert(labeled.values.count(_._1 == "kept") === st.kept)
     }
-    q.stop()
-    val labeled = graft.streaming.CurateStream.labeledView(spark, outPath)
-      .select("doc_id", "drop_reason", "text").collect()
-      .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
-    assert(labeled.size === docRows.size)
-    assert(labeled.filter(_._2._1 == "kept").view.mapValues(_._2).toMap === wantKept)
-    assert(labeled.values.count(_._1 == "kept") === st.kept)
   }
 
   test("frozen lm-bucket sink == batch lmBucketsFrozen across fold boundaries") {
