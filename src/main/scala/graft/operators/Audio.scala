@@ -468,12 +468,11 @@ object Audio {
     * gatedProfile posture extended to audio). Corrupt rows carry
     * zeroed counters and a zero fingerprint — never consulted: the
     * corrupt gate precedes everything and corrupt rows never enter the
-    * survivor set. Output
+    * survivor set. The levels are validated by MediaCurate.AudioGates,
+    * its one caller. Output
     * (doc_id, corrupt, n_samples, n_clipped, n_silent, afp). */
   private[graft] def curationProfile(spark: SparkSession, binDf: DataFrame,
       clipLevel: Int, silenceLevel: Int): DataFrame = {
-    require(clipLevel > 0 && silenceLevel > 0,
-      s"thresholds must be positive, got clip=$clipLevel silence=$silenceLevel")
     import spark.implicits._
     binDf.select(col("doc_id"), col("audio")).as[(Long, Array[Byte])]
       .mapPartitions { rows =>

@@ -901,6 +901,14 @@ object Video {
       .toDF("doc_id", "frame_idx", "img")
   }
 
+  /** [[gatedProfile]]'s threshold check, also run when a
+    * MediaCurate.VideoGates value is built. */
+  private[graft] def requireGateThresholds(minPixels: Long, minFrames: Long,
+      minFps: Long, maxFps: Long): Unit =
+    require(minPixels > 0 && minFrames >= 1 && 0 < minFps && minFps <= maxFps,
+      s"bad gate thresholds: minPixels=$minPixels minFrames=$minFrames " +
+        s"fps=[$minFps,$maxFps]")
+
   /** Fused curation profile — the video arm's gate pass, ONE scan with
     * the cheapest-possible work per doc: the header-only RIFF walk
     * feeds the metadata gates (undersized / too_few_frames / bad_fps),
@@ -921,9 +929,7 @@ object Video {
     * the drop0-null rows. Map-side, no shuffle. */
   def gatedProfile(spark: SparkSession, binDf: DataFrame, minPixels: Long,
       minFrames: Long, minFps: Long, maxFps: Long): DataFrame = {
-    require(minPixels > 0 && minFrames >= 1 && 0 < minFps && minFps <= maxFps,
-      s"bad gate thresholds: minPixels=$minPixels minFrames=$minFrames " +
-        s"fps=[$minFps,$maxFps]")
+    requireGateThresholds(minPixels, minFrames, minFps, maxFps)
     import spark.implicits._
     binDf.select(col("doc_id"), col("video")).as[(Long, Array[Byte])]
       .mapPartitions { rows =>

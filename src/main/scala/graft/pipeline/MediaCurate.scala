@@ -1,274 +1,226 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Audio, Dedup, Fingerprints, Images, Video}
 
-/** End-to-end IMAGE-corpus curation — the text-side [[Curate]] idiom
-  * applied to the round-12/13 media arms: every gate is one of the
+/** End-to-end MEDIA-corpus curation — the text-side [[Curate]] idiom
+  * applied to the image, audio and video arms: every gate is one of the
   * already-oracle-gated operators, composed into ONE labeled frame
-  * where each image carries the reason it left the pipeline (or
+  * where each item carries the reason it left the pipeline (or
   * 'kept'), so the entire accounting is one groupBy over one pass —
   * the 100 TB shape the text pipeline established (six sequential
   * counts would be six corpus passes).
   *
-  * Gate chain, in PRECEDENCE order (an image dropped by an earlier
-  * gate is never consulted by a later one):
-  *   0. `corrupt`     — undecodable scrape bytes, LABELED (quarantined),
-  *                      never thrown (round-14: the video arm's posture
-  *                      extended to all modalities — the loud-fail
-  *                      contract stays on the analysis operators);
-  *   1. `undersized`  — n_px < minPixels (thumbnail/icon junk);
-  *   2. `flat`        — max_lum − min_lum < minContrast (blank or
-  *                      near-blank frames);
-  *   3. `brightness`  — mean luminance outside [minMean, maxMean],
-  *                      compared INTEGER-exactly as sum vs bound·n_px
-  *                      (over- and under-exposed capture junk);
-  *   4. `near_dup`    — not the keeper of its ≤-maxHamming aHash
-  *                      neighborhood ([[Fingerprints.nearDupKeepers]]
-  *                      run among the SURVIVORS of gates 1-3, exactly
-  *                      like the text pipeline runs minhash among the
-  *                      exact-dedup survivors — deduping images that
-  *                      are already dropped would waste the band join
-  *                      and could elect a dropped image as keeper);
-  *   5. `kept`.
+  * Each modality's gates are ONE [[Gates]] value — thresholds, the
+  * fused profile pass, the hash column and the ordered gate list —
+  * shared by the batch [[curate]] and the streaming twin
+  * (StreamingPipelines.mediaCurateSink); both label through [[label]].
+  * Only the near-dup step is path-specific: batch elects keepers across
+  * the corpus ([[Fingerprints.nearDupKeepers]]), the stream probes its
+  * survivor registry.
   *
-  * All thresholds are integers on the decoded 8-bit luminance scale, so
-  * the DuckDB oracle recomputes every gate AND the precedence from the
-  * fixture's pixel formula in one statement (t_curate_images).
+  * Gate chain, in PRECEDENCE order (an item dropped by an earlier gate
+  * is never consulted by a later one):
+  *   0. `corrupt`  — undecodable scrape bytes, LABELED (quarantined),
+  *                   never thrown (round-14: the video arm's posture
+  *                   extended to all modalities — the loud-fail
+  *                   contract stays on the analysis operators);
+  *   1. the modality's threshold gates, in its gate-list order;
+  *   2. `near_dup` — not the keeper of its ≤-maxHamming fingerprint
+  *                   neighborhood, elected among the SURVIVORS of the
+  *                   gates above, exactly like the text pipeline runs
+  *                   minhash among the exact-dedup survivors (deduping
+  *                   items that are already dropped would waste the
+  *                   band join and could elect a dropped item as
+  *                   keeper);
+  *   3. `kept`.
   *
-  * Input: a (doc_id, img binary) frame. One decode pass total — the
-  * stats table is persisted and feeds every gate plus the keeper join.
-  * Returns the labeled frame (doc_id, drop_reason); callers keep with
-  * `filter(col("drop_reason") === "kept")` and release the decode cache
-  * via [[Curate.releaseCaches]] (the shared registry).
+  * All thresholds are integers over decoded pixels/samples or header
+  * fields, so the DuckDB oracle recomputes every gate AND the
+  * precedence from the fixture formulas in one statement
+  * (t_curate_images / t_curate_audio / t_curate_video).
   */
 object MediaCurate {
 
-  /** The batch-default gate thresholds, defined ONCE — the streaming
-    * sinks' defaults and gate builders reference these same constants
-    * (StreamingPipelines), so a batch-default change cannot silently
-    * diverge the streaming verdicts (the drift class verdict3Columns
-    * exists to prevent). */
-  object Defaults {
-    val ImageMinPixels = 128L; val ImageMinContrast = 16
-    val ImageMinMean = 120; val ImageMaxMean = 136
-    val AudioMinSamples = 512L; val AudioClipLevel = 32700
-    val AudioMaxClipDenom = 256L; val AudioSilenceLevel = 256
-    val AudioMaxSilenceDenom = 64L
-    val VideoMinPixels = 512L; val VideoMinFrames = 3L
-    val VideoMinFps = 12L; val VideoMaxFps = 60L
-    val MediaMaxHamming = 3; val VideoMaxHamming = 0
+  /** One modality's curation gates. The constructor refuses bad
+    * thresholds and lossy hamming caps, so a bad value never reaches
+    * either path. */
+  sealed trait Gates {
+    /** Verdict-column prefix and streaming registry subdirectory. */
+    def modality: String
+    /** The binary input column [[profile]] reads next to doc_id. */
+    def input: String
+    /** The fingerprint column near-dup runs on. */
+    def hashCol: String
+    def maxHamming: Int
+    /** ONE fused decode pass: every gate input plus `hashCol`. */
+    def profile(spark: SparkSession, media: DataFrame): DataFrame
+    /** (drop_reason, predicate) over [[profile]]'s columns, `corrupt`
+      * first, in precedence order. */
+    def gates: Seq[(String, Column)]
+    /** Survives every gate — the rows near-dup runs among. */
+    final def survives: Column = !gates.map(_._2).reduce(_ || _)
   }
 
-  def curateImages(spark: SparkSession, images: DataFrame,
-      minPixels: Long = Defaults.ImageMinPixels,
-      minContrast: Int = Defaults.ImageMinContrast,
-      minMean: Int = Defaults.ImageMinMean,
-      maxMean: Int = Defaults.ImageMaxMean,
-      maxHamming: Int = Defaults.MediaMaxHamming): DataFrame = {
+  /** IMAGE gates over (doc_id, img), on the decoded 8-bit luminance
+    * scale:
+    *   `undersized` — n_px < minPixels (thumbnail/icon junk);
+    *   `flat`       — max_lum − min_lum < minContrast (blank or
+    *                  near-blank frames);
+    *   `brightness` — mean luminance outside [minMean, maxMean],
+    *                  compared INTEGER-exactly as sum vs bound·n_px
+    *                  (over- and under-exposed capture junk);
+    * near-dup on the 64-bit aHash. */
+  final case class ImageGates(minPixels: Long = 128L, minContrast: Int = 16,
+      minMean: Int = 120, maxMean: Int = 136, maxHamming: Int = 3)
+      extends Gates {
     require(minPixels > 0 && minContrast >= 0 && minMean <= maxMean,
       s"bad gate thresholds: minPixels=$minPixels minContrast=$minContrast " +
         s"mean=[$minMean,$maxMean]")
     Fingerprints.requireLossless(maxHamming)
-    // ONE decode pass (curation posture: corrupt scrape bytes LABELED,
-    // never thrown — the video arm's contract, shared by all three
-    // modalities); persisted because the gates, the survivor filter
-    // and the final label join all consume it
-    val stats = Dedup.track(
-      Images.curationProfile(spark, images).persist())
-    val corrupt = col("corrupt")
-    val undersized = col("n_px") < minPixels
-    val flat = (col("max_lum") - col("min_lum")) < minContrast
-    // integer-exact mean bounds: mean < minMean  ⟺  sum < minMean·n_px
-    val brightness = col("sum_lum") < lit(minMean.toLong) * col("n_px") ||
-      col("sum_lum") > lit(maxMean.toLong) * col("n_px")
-    val survivors = stats.filter(!corrupt && !undersized && !flat && !brightness)
-    val keepers = Fingerprints.nearDupKeepers(
-      survivors.select(col("doc_id"), col("ahash")), "ahash", maxHamming)
-      .select(col("doc_id"), col("keep"))
-    stats.join(keepers, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(corrupt, lit("corrupt"))
-          .when(undersized, lit("undersized"))
-          .when(flat, lit("flat"))
-          .when(brightness, lit("brightness"))
-          .when(!col("keep"), lit("near_dup"))
-          .otherwise(lit("kept")).as("drop_reason"))
+    def modality = "image"; def input = "img"; def hashCol = "ahash"
+    def profile(spark: SparkSession, media: DataFrame): DataFrame =
+      Images.curationProfile(spark, media)
+    def gates: Seq[(String, Column)] = Seq(
+      "corrupt" -> col("corrupt"),
+      "undersized" -> (col("n_px") < minPixels),
+      "flat" -> ((col("max_lum") - col("min_lum")) < minContrast),
+      // integer-exact mean bounds: mean < minMean  ⟺  sum < minMean·n_px
+      "brightness" -> (col("sum_lum") < lit(minMean.toLong) * col("n_px") ||
+        col("sum_lum") > lit(maxMean.toLong) * col("n_px")))
   }
 
-  /** AUDIO-corpus curation — the same labeled-frame contract over a
-    * (doc_id, audio binary) frame, gates in precedence order:
-    *   0. `corrupt`   — undecodable scrape bytes, quarantined as a label;
-    *   1. `too_short` — n_samples < minSamples (fragments);
-    *   2. `clipped`   — clipped-sample fraction above 1/maxClipDenom,
-    *                    compared INTEGER-exactly as
-    *                    n_clipped·maxClipDenom > n_samples (hard-clipped
-    *                    recordings);
-    *   3. `silent`    — silent-sample fraction above 1/maxSilenceDenom,
-    *                    same integer form (dead air);
-    *   4. `near_dup`  — not the keeper of its fingerprint neighborhood
-    *                    (elected among gate survivors);
-    *   5. `kept`.
-    * ONE decode pass ([[Audio.profile]] — stats+quality fused); the
-    * DuckDB oracle recomposes every gate and the precedence from the
-    * sample formula (t_curate_audio). */
-  def curateAudio(spark: SparkSession, clips: DataFrame,
-      minSamples: Long = Defaults.AudioMinSamples,
-      clipLevel: Int = Defaults.AudioClipLevel,
-      maxClipDenom: Long = Defaults.AudioMaxClipDenom,
-      silenceLevel: Int = Defaults.AudioSilenceLevel,
-      maxSilenceDenom: Long = Defaults.AudioMaxSilenceDenom,
-      maxHamming: Int = Defaults.MediaMaxHamming): DataFrame = {
+  /** AUDIO gates over (doc_id, audio); a sample is clipped when
+    * |s| ≥ clipLevel and silent when |s| < silenceLevel:
+    *   `too_short` — n_samples < minSamples (fragments);
+    *   `clipped`   — clipped-sample fraction above 1/maxClipDenom,
+    *                 compared INTEGER-exactly as
+    *                 n_clipped·maxClipDenom > n_samples (hard-clipped
+    *                 recordings);
+    *   `silent`    — silent-sample fraction above 1/maxSilenceDenom,
+    *                 same integer form (dead air);
+    * near-dup on the 64-bit block-energy fingerprint. */
+  final case class AudioGates(minSamples: Long = 512L, clipLevel: Int = 32700,
+      maxClipDenom: Long = 256L, silenceLevel: Int = 256,
+      maxSilenceDenom: Long = 64L, maxHamming: Int = 3) extends Gates {
     require(minSamples > 0 && maxClipDenom > 0 && maxSilenceDenom > 0,
       s"bad gate thresholds: minSamples=$minSamples clipDenom=$maxClipDenom " +
         s"silenceDenom=$maxSilenceDenom")
+    require(clipLevel > 0 && silenceLevel > 0,
+      s"thresholds must be positive, got clip=$clipLevel silence=$silenceLevel")
     Fingerprints.requireLossless(maxHamming)
-    val prof = Dedup.track(
-      Audio.curationProfile(spark, clips, clipLevel, silenceLevel).persist())
-    val corrupt = col("corrupt")
-    val tooShort = col("n_samples") < minSamples
-    val clipped = col("n_clipped") * maxClipDenom > col("n_samples")
-    val silent = col("n_silent") * maxSilenceDenom > col("n_samples")
-    val survivors = prof.filter(!corrupt && !tooShort && !clipped && !silent)
-    val keepers = Fingerprints.nearDupKeepers(
-      survivors.select(col("doc_id"), col("afp")), "afp", maxHamming)
-      .select(col("doc_id"), col("keep"))
-    prof.join(keepers, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(corrupt, lit("corrupt"))
-          .when(tooShort, lit("too_short"))
-          .when(clipped, lit("clipped"))
-          .when(silent, lit("silent"))
-          .when(!col("keep"), lit("near_dup"))
-          .otherwise(lit("kept")).as("drop_reason"))
+    def modality = "audio"; def input = "audio"; def hashCol = "afp"
+    def profile(spark: SparkSession, media: DataFrame): DataFrame =
+      Audio.curationProfile(spark, media, clipLevel, silenceLevel)
+    def gates: Seq[(String, Column)] = Seq(
+      "corrupt" -> col("corrupt"),
+      "too_short" -> (col("n_samples") < minSamples),
+      "clipped" -> (col("n_clipped") * maxClipDenom > col("n_samples")),
+      "silent" -> (col("n_silent") * maxSilenceDenom > col("n_samples")))
   }
 
-  /** VIDEO-corpus curation — the same labeled-frame contract over a
-    * (doc_id, video binary) frame. The video arm's gates are cheaper
-    * than the image/audio arms': all metadata gates read ONLY the RIFF
-    * header (no JPEG payload), and the keyframe is decoded only for
-    * gate SURVIVORS ([[graft.operators.Video.gatedProfile]] fuses the
-    * whole pass). Gates in precedence order:
-    *   1. `corrupt`        — unparseable/undecodable container bytes,
-    *                         LABELED (quarantined), never thrown — a
-    *                         100 TB scrape pass must not die on one bad
-    *                         file (the loud-fail contract stays on the
-    *                         analysis operators videoMeta/frameTable);
-    *   2. `undersized`     — width·height < minPixels (thumbnail junk);
-    *   3. `too_few_frames` — n_frames < minFrames (stills/fragments);
-    *   4. `bad_fps`        — frame rate outside [minFps, maxFps]
-    *                         (slideshow or slow-mo capture junk; fps =
-    *                         rate/scale, integer division both sides);
-    *   5. `near_dup`       — not the keeper of its keyframe-aHash
-    *                         neighborhood, elected among gate SURVIVORS
-    *                         (default maxHamming = 0: exact keyframe
-    *                         duplicates, codec-caveat-free — see
-    *                         Video.keyframeHashes);
-    *   6. `kept`.
-    * All thresholds are integers over header fields the DuckDB oracle
-    * recomputes from the fixture's parameter formula, and the keeper
-    * election is structurally predictable on the fixture
-    * (t_curate_video recomposes gates AND precedence AND the
-    * survivor-keeper election in one statement). */
-  def curateVideo(spark: SparkSession, vids: DataFrame,
-      minPixels: Long = Defaults.VideoMinPixels,
-      minFrames: Long = Defaults.VideoMinFrames,
-      minFps: Long = Defaults.VideoMinFps,
-      maxFps: Long = Defaults.VideoMaxFps,
-      maxHamming: Int = Defaults.VideoMaxHamming): DataFrame = {
+  /** VIDEO gates over (doc_id, video). Cheaper than the image/audio
+    * arms': every metadata gate reads ONLY the RIFF header (no JPEG
+    * payload), and the keyframe is decoded only for gate SURVIVORS
+    * ([[graft.operators.Video.gatedProfile]] fuses the whole pass and
+    * names the first firing gate in `drop0`, NULL for survivors):
+    *   `undersized`     — width·height < minPixels (thumbnail junk);
+    *   `too_few_frames` — n_frames < minFrames (stills/fragments);
+    *   `bad_fps`        — frame rate outside [minFps, maxFps]
+    *                      (slideshow or slow-mo capture junk; fps =
+    *                      rate/scale, integer division both sides);
+    * near-dup on the keyframe aHash (default maxHamming = 0: exact
+    * keyframe duplicates, codec-caveat-free — see
+    * Video.keyframeHashes). The keeper election is structurally
+    * predictable on the fixture, so t_curate_video recomposes gates AND
+    * precedence AND the survivor-keeper election in one statement. */
+  final case class VideoGates(minPixels: Long = 512L, minFrames: Long = 3L,
+      minFps: Long = 12L, maxFps: Long = 60L, maxHamming: Int = 0)
+      extends Gates {
+    Video.requireGateThresholds(minPixels, minFrames, minFps, maxFps)
     Fingerprints.requireLossless(maxHamming)
-    // gatedProfile re-validates the thresholds; persisted because the
-    // survivor filter and the final label join both consume it (16 B of
-    // hash + one small string per doc — never the binaries)
-    val prof = Dedup.track(
-      Video.gatedProfile(spark, vids, minPixels, minFrames, minFps, maxFps)
-        .persist())
-    val survivors = prof.filter(col("drop0").isNull)
-      .select(col("doc_id"), col("khash"))
-    val keepers = Fingerprints.nearDupKeepers(survivors, "khash", maxHamming)
+    def modality = "video"; def input = "video"; def hashCol = "khash"
+    def profile(spark: SparkSession, media: DataFrame): DataFrame =
+      Video.gatedProfile(spark, media, minPixels, minFrames, minFps, maxFps)
+    // null-safe: drop0 is NULL for survivors
+    def gates: Seq[(String, Column)] =
+      Seq("corrupt", "undersized", "too_few_frames", "bad_fps")
+        .map(g => g -> (col("drop0") <=> lit(g)))
+  }
+
+  /** The labeled frame (doc_id, drop_reason) over `prof` — the profile
+    * joined with the near-dup verdict — ONE definition for batch and
+    * stream: `g`'s gates in order, then `near_dup` where `dup` holds,
+    * then `kept`. */
+  private[graft] def label(prof: DataFrame, g: Gates, dup: Column): DataFrame = {
+    val ((first, pred), rest) = (g.gates.head, g.gates.tail)
+    val reason = rest.foldLeft(when(pred, lit(first))) {
+      case (acc, (name, p)) => acc.when(p, lit(name))
+    }
+    prof.select(col("doc_id"), reason.when(dup, lit("near_dup"))
+      .otherwise(lit("kept")).as("drop_reason"))
+  }
+
+  /** Curate one modality: ONE decode pass, persisted because the
+    * survivor filter and the final label join both consume it (tracked,
+    * so [[Curate.releaseCaches]] frees it), then keeper election among
+    * the gate survivors. Returns (doc_id, drop_reason); callers keep
+    * with `filter(col("drop_reason") === "kept")`. */
+  def curate(spark: SparkSession, media: DataFrame, g: Gates): DataFrame = {
+    val prof = Dedup.track(g.profile(spark, media).persist())
+    val keepers = Fingerprints.nearDupKeepers(
+      prof.filter(g.survives).select(col("doc_id"), col(g.hashCol)),
+      g.hashCol, g.maxHamming)
       .select(col("doc_id"), col("keep"))
-    prof.join(keepers, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("drop0").isNotNull, col("drop0"))
-          .when(!col("keep"), lit("near_dup"))
-          .otherwise(lit("kept")).as("drop_reason"))
+    label(prof.join(keepers, Seq("doc_id"), "left"), g, !col("keep"))
   }
 
   /** CROSS-MODAL curation: a document survives a multimodal training
-    * corpus only if EVERY modality keeps it. Joins the per-modality
-    * labeled frames (each produced by its own gate chain + keeper
-    * dedup) and composes one final verdict with modality-qualified
-    * reasons — image gates take precedence over audio gates, matching
-    * the per-modality precedence idiom (the FIRST firing gate names
-    * the drop). Output one row per doc:
-    * (doc_id, image_reason, audio_reason, drop_reason). Mismatched id
-    * sets surface AT THE OPERATOR: the join is FULL OUTER and a doc
-    * present in only one input is labeled `missing_modality:<absent
-    * modality>` (its per-modality reason column reads 'missing') —
-    * an inner join would silently drop such docs from the accounting,
-    * the silent-wrong class this repo refuses, and a missing modality
-    * outranks every gate (there is nothing to curate). */
+    * corpus only if EVERY modality keeps it. Output one row per doc:
+    * (doc_id, image_reason, audio_reason, drop_reason); see [[verdict]]. */
   def curateMedia(spark: SparkSession, images: DataFrame,
-      clips: DataFrame): DataFrame = {
-    val img = curateImages(spark, images)
-      .select(col("doc_id"), col("drop_reason").as("image_reason"))
-    val aud = curateAudio(spark, clips)
-      .select(col("doc_id"), col("drop_reason").as("audio_reason"))
-    img.join(aud, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        coalesce(col("image_reason"), lit("missing")).as("image_reason"),
-        coalesce(col("audio_reason"), lit("missing")).as("audio_reason"),
-        when(col("image_reason").isNull, lit("missing_modality:image"))
-          .when(col("audio_reason").isNull, lit("missing_modality:audio"))
-          .when(col("image_reason") =!= "kept",
-            concat(lit("image:"), col("image_reason")))
-          .when(col("audio_reason") =!= "kept",
-            concat(lit("audio:"), col("audio_reason")))
-          .otherwise(lit("kept")).as("drop_reason"))
-  }
+      clips: DataFrame): DataFrame =
+    verdict(Seq(ImageGates() -> images, AudioGates() -> clips)
+      .map { case (g, df) => g.modality -> curate(spark, df, g) })
 
   /** THREE-modality curation — [[curateMedia]]'s contract extended to
-    * image + audio + video: each modality runs its own full gate chain
-    * + survivor-keeper dedup, the verdicts full-outer-join, and the
-    * final reason is the first non-kept modality in precedence order
-    * image → audio → video (missing_modality outranks every gate —
-    * there is nothing to curate). Output one row per doc across the
-    * UNION of the three id sets:
+    * image + audio + video. Output one row per doc across the UNION of
+    * the three id sets:
     * (doc_id, image_reason, audio_reason, video_reason, drop_reason). */
   def curateMedia3(spark: SparkSession, images: DataFrame,
-      clips: DataFrame, vids: DataFrame): DataFrame = {
-    val img = curateImages(spark, images)
-      .select(col("doc_id"), col("drop_reason").as("image_reason"))
-    val aud = curateAudio(spark, clips)
-      .select(col("doc_id"), col("drop_reason").as("audio_reason"))
-    val vid = curateVideo(spark, vids)
-      .select(col("doc_id"), col("drop_reason").as("video_reason"))
-    img.join(aud, Seq("doc_id"), "full_outer")
-      .join(vid, Seq("doc_id"), "full_outer")
-      .select(verdict3Columns: _*)
-  }
+      clips: DataFrame, vids: DataFrame): DataFrame =
+    verdict(Seq(ImageGates() -> images, AudioGates() -> clips,
+      VideoGates() -> vids)
+      .map { case (g, df) => g.modality -> curate(spark, df, g) })
 
-  /** The three-modality verdict projection — ONE definition shared by
-    * [[curateMedia3]] and the streaming twin
+  /** The cross-modal verdict — ONE definition shared by
+    * [[curateMedia]], [[curateMedia3]] and the streaming twin
     * (StreamingPipelines.mediaCurate3Sink), or the precedence drifts.
-    * Expects a frame with doc_id + image_reason/audio_reason/
-    * video_reason, any of which may be null (doc absent from that
-    * modality after the full outer join). */
-  private[graft] def verdict3Columns: Seq[org.apache.spark.sql.Column] = Seq(
-    col("doc_id"),
-    coalesce(col("image_reason"), lit("missing")).as("image_reason"),
-    coalesce(col("audio_reason"), lit("missing")).as("audio_reason"),
-    coalesce(col("video_reason"), lit("missing")).as("video_reason"),
-    when(col("image_reason").isNull, lit("missing_modality:image"))
-      .when(col("audio_reason").isNull, lit("missing_modality:audio"))
-      .when(col("video_reason").isNull, lit("missing_modality:video"))
-      .when(col("image_reason") =!= "kept",
-        concat(lit("image:"), col("image_reason")))
-      .when(col("audio_reason") =!= "kept",
-        concat(lit("audio:"), col("audio_reason")))
-      .when(col("video_reason") =!= "kept",
-        concat(lit("video:"), col("video_reason")))
-      .otherwise(lit("kept")).as("drop_reason"))
+    * Full-outer-joins the (modality, labeled frame) pairs and composes
+    * one final verdict with modality-qualified reasons — the first
+    * non-kept modality in the given order names the drop, matching the
+    * per-modality precedence idiom. Mismatched id sets surface AT THE
+    * OPERATOR: a doc absent from a modality is labeled
+    * `missing_modality:<modality>` (its reason column reads 'missing')
+    * — an inner join would silently drop such docs from the accounting,
+    * the silent-wrong class this repo refuses, and a missing modality
+    * outranks every gate (there is nothing to curate). */
+  private[graft] def verdict(labeled: Seq[(String, DataFrame)]): DataFrame = {
+    val ms = labeled.map(_._1)
+    def reason(m: String) = col(s"${m}_reason")
+    val arms = ms.map(m => reason(m).isNull -> lit(s"missing_modality:$m")) ++
+      ms.map(m => (reason(m) =!= "kept") -> concat(lit(s"$m:"), reason(m)))
+    val drop = arms.tail.foldLeft(when(arms.head._1, arms.head._2)) {
+      case (acc, (p, v)) => acc.when(p, v)
+    }
+    labeled.map { case (m, df) =>
+        df.select(col("doc_id"), col("drop_reason").as(s"${m}_reason"))
+      }
+      .reduce(_.join(_, Seq("doc_id"), "full_outer"))
+      .select(col("doc_id") +: ms.map(m =>
+        coalesce(reason(m), lit("missing")).as(s"${m}_reason")) :+
+        drop.otherwise(lit("kept")).as("drop_reason"): _*)
+  }
 }

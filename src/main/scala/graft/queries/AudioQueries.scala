@@ -247,7 +247,7 @@ object AudioQueries {
       FROM apd d JOIN rst t USING (doc_id) JOIN rzc z USING (doc_id)
            JOIN rfh f USING (doc_id)"""))
 
-  /** End-to-end audio curation (pipeline/MediaCurate.curateAudio):
+  /** End-to-end audio curation (pipeline/MediaCurate.curate, AudioGates):
     * length, clipping and silence gates plus keeper-form near-dup
     * removal among gate survivors in one labeled frame — the oracle
     * recomposes every gate and the precedence from the sample formula
@@ -255,8 +255,9 @@ object AudioQueries {
   val tCurateAudio: Q = Q(
     "t_curate_audio",
     run = (s, dir) =>
-      graft.pipeline.MediaCurate.curateAudio(s,
-        Audio.synthesize(s, Tables.documents(s, dir))),
+      graft.pipeline.MediaCurate.curate(s,
+        Audio.synthesize(s, Tables.documents(s, dir)),
+        graft.pipeline.MediaCurate.AudioGates()),
     oracle = Some(s"""
       WITH ${audioCtes("documents")}
       prof AS (SELECT doc_id, COUNT(*) AS n,

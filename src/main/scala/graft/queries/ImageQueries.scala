@@ -174,8 +174,9 @@ object ImageQueries {
   val tCurateImages: Q = Q(
     "t_curate_images",
     run = (s, dir) =>
-      graft.pipeline.MediaCurate.curateImages(s,
-        Images.synthesize(s, Tables.documents(s, dir))),
+      graft.pipeline.MediaCurate.curate(s,
+        Images.synthesize(s, Tables.documents(s, dir)),
+        graft.pipeline.MediaCurate.ImageGates()),
     oracle = Some(s"""
       WITH ${imageCtes("documents")}
       lbl AS (SELECT s.doc_id, a.ahash,

@@ -238,7 +238,7 @@ object VideoQueries {
     oracle = Some("""
       SELECT doc_id, (doc_id = doc_id % 200) AS keep FROM documents"""))
 
-  /** Video-corpus curation (pipeline/MediaCurate.curateVideo): the
+  /** Video-corpus curation (pipeline/MediaCurate.curate, VideoGates): the
     * labeled-frame contract over the video arm — header-only metadata
     * gates (undersized / too_few_frames / bad_fps, all pure integer
     * predicates over fields the oracle recomputes from synthParams),
@@ -256,8 +256,9 @@ object VideoQueries {
   val tCurateVideo: Q = Q(
     "t_curate_video",
     run = (s, dir) =>
-      graft.pipeline.MediaCurate.curateVideo(s,
-        Video.synthesize(s, Tables.documents(s, dir))),
+      graft.pipeline.MediaCurate.curate(s,
+        Video.synthesize(s, Tables.documents(s, dir)),
+        graft.pipeline.MediaCurate.VideoGates()),
     oracle = Some(s"""
       WITH ${videoCtes("documents")}
       final AS (

@@ -655,101 +655,25 @@ object StreamingPipelines {
       hashCol = "afp",
       stats = (spark, b) => graft.operators.Audio.audioStats(spark, b))
 
-  /** Incremental IMAGE CURATION — the streaming twin of
-    * pipeline/MediaCurate.curateImages, same labeled-frame contract:
-    * each micro-batch decodes once, applies the stateless gates
-    * (undersized / flat / brightness — per-image predicates, identical
-    * thresholds), and runs the near-dup gate among GATE SURVIVORS
-    * against the (doc_id, ahash) survivor registry plus the in-batch
-    * banded pair join. Only gate SURVIVORS register (matching the
-    * batch rule that keepers are elected among survivors — a
-    * gate-dropped image must never block a future near-dup), and
-    * dropped-by-dedup survivors register too (a later near-dup of a
-    * dropped survivor still drops, the imageDedupSink property).
-    * Writes the FULL labeled frame per batch to `outPath/batch=<id>`
-    * (doc_id, drop_reason) — stream ≡ batch on an id-ordered feed,
-    * pinned in StreamingSpec. Same exactly-once posture as the dedup
-    * sinks (idempotent batch=<id> overwrites, own-batch-excluded
-    * registry reads, periodic compaction). */
-  def imageCurateSink(imgs: DataFrame, registryPath: String, outPath: String,
-      minPixels: Long = graft.pipeline.MediaCurate.Defaults.ImageMinPixels,
-      minContrast: Int = graft.pipeline.MediaCurate.Defaults.ImageMinContrast,
-      minMean: Int = graft.pipeline.MediaCurate.Defaults.ImageMinMean,
-      maxMean: Int = graft.pipeline.MediaCurate.Defaults.ImageMaxMean,
-      maxHamming: Int = graft.pipeline.MediaCurate.Defaults.MediaMaxHamming,
-      compactEvery: Int = 16): DataStreamWriter[Row] = {
-    require(minPixels > 0 && minContrast >= 0 && minMean <= maxMean,
-      s"bad gate thresholds: minPixels=$minPixels minContrast=$minContrast " +
-        s"mean=[$minMean,$maxMean]")
-    mediaCurateSink(imgs, registryPath, outPath, maxHamming, compactEvery,
-      hashCol = "ahash",
-      profile = (spark, b) => graft.operators.Images.curationProfile(spark, b),
-      gates = corruptGate +: imageGates(minPixels, minContrast, minMean, maxMean))
-  }
-
-  /** Incremental AUDIO CURATION — the streaming twin of
-    * MediaCurate.curateAudio, same labeled-frame contract and the same
-    * survivor-only registry protocol as [[imageCurateSink]] (shared
-    * [[mediaCurateSink]]). */
-  def audioCurateSink(clips: DataFrame, registryPath: String, outPath: String,
-      minSamples: Long = graft.pipeline.MediaCurate.Defaults.AudioMinSamples,
-      clipLevel: Int = graft.pipeline.MediaCurate.Defaults.AudioClipLevel,
-      maxClipDenom: Long = graft.pipeline.MediaCurate.Defaults.AudioMaxClipDenom,
-      silenceLevel: Int = graft.pipeline.MediaCurate.Defaults.AudioSilenceLevel,
-      maxSilenceDenom: Long = graft.pipeline.MediaCurate.Defaults.AudioMaxSilenceDenom,
-      maxHamming: Int = graft.pipeline.MediaCurate.Defaults.MediaMaxHamming,
-      compactEvery: Int = 16): DataStreamWriter[Row] = {
-    require(minSamples > 0 && maxClipDenom > 0 && maxSilenceDenom > 0,
-      s"bad gate thresholds: minSamples=$minSamples clipDenom=$maxClipDenom " +
-        s"silenceDenom=$maxSilenceDenom")
-    mediaCurateSink(clips, registryPath, outPath, maxHamming, compactEvery,
-      hashCol = "afp",
-      profile = (spark, b) =>
-        graft.operators.Audio.curationProfile(spark, b, clipLevel, silenceLevel),
-      gates = corruptGate +: audioGates(minSamples, maxClipDenom, maxSilenceDenom))
-  }
-
-  /** Incremental VIDEO CURATION — the streaming twin of
-    * MediaCurate.curateVideo, same labeled-frame contract and the same
-    * survivor-only registry protocol as [[imageCurateSink]] (shared
-    * [[mediaCurateSink]]). The profile pass is Video.gatedProfile —
-    * header-only metadata gates, keyframe decoded ONLY for gate
-    * survivors, corrupt containers LABELED (quarantined) rather than
-    * thrown; the gate predicates here just read the profile's
-    * precomputed drop0 label (null-safe `<=>` — drop0 is NULL for
-    * survivors), so batch and stream share one gate definition. */
-  def videoCurateSink(vids: DataFrame, registryPath: String, outPath: String,
-      minPixels: Long = graft.pipeline.MediaCurate.Defaults.VideoMinPixels,
-      minFrames: Long = graft.pipeline.MediaCurate.Defaults.VideoMinFrames,
-      minFps: Long = graft.pipeline.MediaCurate.Defaults.VideoMinFps,
-      maxFps: Long = graft.pipeline.MediaCurate.Defaults.VideoMaxFps,
-      maxHamming: Int = graft.pipeline.MediaCurate.Defaults.VideoMaxHamming,
-      compactEvery: Int = 16): DataStreamWriter[Row] = {
-    require(minPixels > 0 && minFrames >= 1 && 0 < minFps && minFps <= maxFps,
-      s"bad gate thresholds: minPixels=$minPixels minFrames=$minFrames " +
-        s"fps=[$minFps,$maxFps]")
-    mediaCurateSink(vids, registryPath, outPath, maxHamming, compactEvery,
-      hashCol = "khash",
-      profile = (spark, b) => graft.operators.Video.gatedProfile(
-        spark, b, minPixels, minFrames, minFps, maxFps),
-      gates = videoGates)
-  }
-
-  /** The shared gated-curation sink behind the image, audio and video
-    * curation twins: per micro-batch — ONE decode (`profile`),
-    * stateless gate labels in precedence order, near-dup among gate
-    * SURVIVORS against the survivor-only fingerprint registry plus the
-    * in-batch banded pair join (a gate-dropped item never blocks a
-    * future near-dup — the batch rule that keepers are elected among
-    * survivors), full labeled frame written per batch, survivors
-    * registered (drops-by-dedup included, so a later near-dup of a
-    * dropped survivor still drops). Same exactly-once posture as the
-    * dedup sinks. */
-  private def mediaCurateSink(media: DataFrame, registryPath: String,
-      outPath: String, maxHamming: Int, compactEvery: Int, hashCol: String,
-      profile: (SparkSession, DataFrame) => DataFrame,
-      gates: Seq[(String, Column)]): DataStreamWriter[Row] = {
-    graft.operators.Fingerprints.requireLossless(maxHamming)
+  /** Incremental MEDIA CURATION — the streaming twin of
+    * pipeline/MediaCurate.curate, same labeled-frame contract and the
+    * same [[graft.pipeline.MediaCurate.Gates]] value: per micro-batch
+    * ONE decode (`g.profile`), the gates and their precedence through
+    * MediaCurate.label, and near-dup among gate SURVIVORS against the
+    * (doc_id, <g.hashCol>) survivor registry plus the in-batch banded
+    * pair join. Only gate SURVIVORS register (matching the batch rule
+    * that keepers are elected among survivors — a gate-dropped item
+    * must never block a future near-dup), and dropped-by-dedup
+    * survivors register too (a later near-dup of a dropped survivor
+    * still drops, the imageDedupSink property). Writes the FULL labeled
+    * frame per batch to `outPath/batch=<id>` (doc_id, drop_reason) —
+    * stream ≡ batch on an id-ordered feed, pinned in StreamingSpec for
+    * every modality. Same exactly-once posture as the dedup sinks
+    * (idempotent batch=<id> overwrites, own-batch-excluded registry
+    * reads, periodic compaction). */
+  def mediaCurateSink(media: DataFrame, registryPath: String, outPath: String,
+      g: graft.pipeline.MediaCurate.Gates,
+      compactEvery: Int = 16): DataStreamWriter[Row] =
     media.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
@@ -757,45 +681,44 @@ object StreamingPipelines {
         Registry.maybeCompact(spark, registryPath, Seq(registryPath),
           upToExclusive = batchId, every = compactEvery)
         val dedupMark = graft.operators.Dedup.trackMark(spark)
-        val b = batch.toDF().persist()
-        val prof = profile(spark, b).persist()
+        // the decode pass is the batch's only consumer and its output is
+        // persisted, so the raw binaries are not
+        val prof = g.profile(spark, batch.toDF()).persist()
         try {
-          val (labeled, surv) = gatedLabelForBatch(spark, prof, registryPath,
-            batchId, hashCol, maxHamming, gates)
+          val (labeled, surv) =
+            gatedLabelForBatch(spark, prof, registryPath, batchId, g)
           try {
             labeled.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
             surv.write.mode("overwrite").parquet(s"$registryPath/batch=$batchId")
           } finally { surv.unpersist(); () }
         } finally {
-          prof.unpersist(); b.unpersist()
+          prof.unpersist()
           graft.operators.Dedup.releaseSince(spark, dedupMark)
           ()
         }
       }
-  }
 
   /** One modality's gated labeled frame for one micro-batch — the body
-    * shared by the single-modality curation sinks and the cross-modal
-    * [[mediaCurate3Sink]]: stateless gate labels, near-dup among gate
-    * SURVIVORS against this modality's survivor-only registry plus the
-    * in-batch banded pair join. `prof` must be persisted by the
-    * caller; the returned survivor frame is persisted HERE and the
+    * shared by [[mediaCurateSink]] and the cross-modal
+    * [[mediaCurate3Sink]]: near-dup among gate SURVIVORS against this
+    * modality's survivor-only registry plus the in-batch banded pair
+    * join, labeled by MediaCurate.label. `prof` must be persisted by
+    * the caller; the returned survivor frame is persisted HERE and the
     * caller unpersists it after writing — on an internal throw the
     * persist is released before rethrowing, so a failed call never
     * leaks cache. Returns
     * (labeled(doc_id, drop_reason), survivors-to-register). */
   private def gatedLabelForBatch(spark: SparkSession, prof: DataFrame,
-      registryPath: String, batchId: Long, hashCol: String, maxHamming: Int,
-      gates: Seq[(String, Column)]): (DataFrame, DataFrame) = {
-    val anyGate = gates.map(_._2).reduce(_ || _)
-    val surv = prof.filter(!anyGate)
-      .select(col("doc_id"), col(hashCol)).persist()
+      registryPath: String, batchId: Long,
+      g: graft.pipeline.MediaCurate.Gates): (DataFrame, DataFrame) = {
+    val surv = prof.filter(g.survives)
+      .select(col("doc_id"), col(g.hashCol)).persist()
     // a throw below (e.g. the registry parquet read) must not leak the
     // persist we just took — release it before rethrowing; on success
     // the caller owns the release after writing
     try {
       val inBatch = graft.operators.Fingerprints
-        .nearDupPairs(surv, hashCol, maxHamming)
+        .nearDupPairs(surv, g.hashCol, g.maxHamming)
         .select(col("doc_b").as("doc_id")).distinct()
       val v = Registry.view(spark, registryPath, registryPath,
         excludeId = batchId)
@@ -803,21 +726,15 @@ object StreamingPipelines {
         if (v.isEmpty) surv.select(col("doc_id")).limit(0)
         else {
           val reg = spark.read.parquet(v.paths: _*)
-            .select(col("doc_id"), col(hashCol))
+            .select(col("doc_id"), col(g.hashCol))
           graft.operators.Fingerprints
-            .hammingPairsAcross(surv, reg, hashCol, maxHamming)
+            .hammingPairsAcross(surv, reg, g.hashCol, g.maxHamming)
             .select(col("doc_id")).distinct()
         }
       val dupped = inBatch.union(vsRegistry).distinct()
         .withColumn("__dup", lit(1))
-      val label = gates.foldLeft(
-          when(lit(false), lit(""))) { case (acc, (name, pred)) =>
-        acc.when(pred, lit(name))
-      }
-        .when(col("__dup").isNotNull, lit("near_dup"))
-        .otherwise(lit("kept"))
-      val labeled = prof.join(dupped, Seq("doc_id"), "left")
-        .select(col("doc_id"), label.as("drop_reason"))
+      val labeled = graft.pipeline.MediaCurate.label(
+        prof.join(dupped, Seq("doc_id"), "left"), g, col("__dup").isNotNull)
       (labeled, surv)
     } catch {
       case t: Throwable => surv.unpersist(); throw t
@@ -826,115 +743,57 @@ object StreamingPipelines {
 
   /** Incremental THREE-modality curation — the streaming twin of
     * MediaCurate.curateMedia3 over a (doc_id, img, audio, video)
-    * stream: each micro-batch runs all three gated chains (each with
-    * its OWN survivor-only registry under `registryRoot/<modality>`,
-    * the same protocol as the single-modality sinks), full-outer-joins
-    * the per-modality labels and writes the cross-modal verdict frame
-    * per batch — the verdict projection is
-    * MediaCurate.verdict3Columns, ONE definition with the batch
-    * pipeline. Thresholds are the batch defaults
-    * (MediaCurate.Defaults — one definition). ALL THREE modalities
-    * quarantine corrupt/undecodable binaries as a `corrupt` label
-    * (the curation profiles catch decode failures — one bad scrape
-    * file never kills the query); a doc absent from a modality's
-    * input entirely cannot happen here (one row carries all three
-    * columns), so verdict3Columns' missing_modality arms are
-    * structurally unreachable in this sink — they exist for the batch
-    * curateMedia3's separate-input shape. */
+    * stream: each micro-batch runs all three gated chains at the
+    * default gate values (each with its OWN survivor-only registry
+    * under `registryRoot/<modality>`, the same protocol as
+    * [[mediaCurateSink]]) and writes the cross-modal verdict frame per
+    * batch through MediaCurate.verdict, ONE definition with the batch
+    * pipeline. A doc absent from a modality's input entirely cannot
+    * happen here (one row carries all three columns), so the verdict's
+    * missing_modality arms are structurally unreachable in this sink —
+    * they exist for the batch curateMedia3's separate-input shape. */
   def mediaCurate3Sink(media: DataFrame, registryRoot: String,
       outPath: String, compactEvery: Int = 16): DataStreamWriter[Row] = {
-    val imgReg = s"$registryRoot/image"
-    val audReg = s"$registryRoot/audio"
-    val vidReg = s"$registryRoot/video"
+    import graft.pipeline.MediaCurate.{AudioGates, ImageGates, VideoGates}
+    val arms = Seq(ImageGates(), AudioGates(), VideoGates())
+      .map(g => g -> s"$registryRoot/${g.modality}")
     media.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        for (r <- Seq(imgReg, audReg, vidReg))
+        for ((_, r) <- arms)
           Registry.maybeCompact(spark, r, Seq(r),
             upToExclusive = batchId, every = compactEvery)
         val dedupMark = graft.operators.Dedup.trackMark(spark)
+        // three decode passes read the batch, so it is persisted
         val b = batch.toDF().persist()
-        val D = graft.pipeline.MediaCurate.Defaults
-        val imgProf = graft.operators.Images
-          .curationProfile(spark, b.select(col("doc_id"), col("img")))
-          .persist()
-        val audProf = graft.operators.Audio
-          .curationProfile(spark, b.select(col("doc_id"), col("audio")),
-            D.AudioClipLevel, D.AudioSilenceLevel).persist()
-        val vidProf = graft.operators.Video
-          .gatedProfile(spark, b.select(col("doc_id"), col("video")),
-            D.VideoMinPixels, D.VideoMinFrames, D.VideoMinFps,
-            D.VideoMaxFps).persist()
+        val profs = arms.map { case (g, _) =>
+          g.profile(spark, b.select(col("doc_id"), col(g.input))).persist()
+        }
         // each modality's survivor frame is released as soon as it is
         // acquired-tracked, so a throw in a LATER modality's gated call
         // cannot leak an earlier modality's persist (gatedLabelForBatch
         // releases its own persist on internal failure)
         val acquiredSurvs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
         try {
-          val (imgLbl, imgSurv) = gatedLabelForBatch(spark, imgProf, imgReg,
-            batchId, "ahash", D.MediaMaxHamming,
-            corruptGate +: imageGates(D.ImageMinPixels, D.ImageMinContrast,
-              D.ImageMinMean, D.ImageMaxMean))
-          acquiredSurvs += imgSurv
-          val (audLbl, audSurv) = gatedLabelForBatch(spark, audProf, audReg,
-            batchId, "afp", D.MediaMaxHamming,
-            corruptGate +: audioGates(D.AudioMinSamples, D.AudioMaxClipDenom,
-              D.AudioMaxSilenceDenom))
-          acquiredSurvs += audSurv
-          val (vidLbl, vidSurv) = gatedLabelForBatch(spark, vidProf, vidReg,
-            batchId, "khash", D.VideoMaxHamming, videoGates)
-          acquiredSurvs += vidSurv
-          imgLbl.select(col("doc_id"), col("drop_reason").as("image_reason"))
-            .join(audLbl.select(col("doc_id"),
-              col("drop_reason").as("audio_reason")), Seq("doc_id"), "full_outer")
-            .join(vidLbl.select(col("doc_id"),
-              col("drop_reason").as("video_reason")), Seq("doc_id"), "full_outer")
-            .select(graft.pipeline.MediaCurate.verdict3Columns: _*)
+          val labeled = arms.zip(profs).map { case ((g, r), prof) =>
+            val (lbl, surv) = gatedLabelForBatch(spark, prof, r, batchId, g)
+            acquiredSurvs += surv
+            g.modality -> lbl
+          }
+          graft.pipeline.MediaCurate.verdict(labeled)
             .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          imgSurv.write.mode("overwrite").parquet(s"$imgReg/batch=$batchId")
-          audSurv.write.mode("overwrite").parquet(s"$audReg/batch=$batchId")
-          vidSurv.write.mode("overwrite").parquet(s"$vidReg/batch=$batchId")
+          for (((_, r), surv) <- arms.zip(acquiredSurvs))
+            surv.write.mode("overwrite").parquet(s"$r/batch=$batchId")
         } finally {
           acquiredSurvs.foreach(_.unpersist())
-          imgProf.unpersist(); audProf.unpersist(); vidProf.unpersist()
+          profs.foreach(_.unpersist())
           b.unpersist()
           graft.operators.Dedup.releaseSince(spark, dedupMark)
           ()
         }
       }
   }
-
-  /** The gate predicates, defined ONCE per modality and parameterized
-    * by thresholds — the per-modality sinks pass their (defaulted)
-    * params and [[mediaCurate3Sink]] passes MediaCurate.Defaults, so
-    * no literal threshold is ever restated. */
-  /** The corrupt quarantine gate shared by all three modalities — the
-    * curation profiles emit a boolean `corrupt` column (decode failure
-    * caught, never thrown) that precedes every threshold gate. */
-  private def corruptGate: (String, Column) = "corrupt" -> col("corrupt")
-
-  private def imageGates(minPixels: Long, minContrast: Int,
-      minMean: Int, maxMean: Int): Seq[(String, Column)] = Seq(
-    "undersized" -> (col("n_px") < minPixels),
-    "flat" -> ((col("max_lum") - col("min_lum")) < minContrast),
-    "brightness" -> (col("sum_lum") < lit(minMean.toLong) * col("n_px") ||
-      col("sum_lum") > lit(maxMean.toLong) * col("n_px")))
-
-  private def audioGates(minSamples: Long, maxClipDenom: Long,
-      maxSilenceDenom: Long): Seq[(String, Column)] = Seq(
-    "too_short" -> (col("n_samples") < minSamples),
-    "clipped" -> (col("n_clipped") * maxClipDenom > col("n_samples")),
-    "silent" -> (col("n_silent") * maxSilenceDenom > col("n_samples")))
-
-  /** Video gates read the precomputed drop0 label from
-    * Video.gatedProfile (null-safe — drop0 is NULL for survivors), so
-    * batch and stream share one gate definition by construction. */
-  private def videoGates: Seq[(String, Column)] = Seq(
-    "corrupt" -> (col("drop0") <=> lit("corrupt")),
-    "undersized" -> (col("drop0") <=> lit("undersized")),
-    "too_few_frames" -> (col("drop0") <=> lit("too_few_frames")),
-    "bad_fps" -> (col("drop0") <=> lit("bad_fps")))
 
   /** Incremental VIDEO near-dup removal — keyframe perceptual hashes
     * (decode ONLY frame 0 per video) through the same shared
@@ -979,13 +838,20 @@ object StreamingPipelines {
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val b = batch.toDF().persist()
+        // decontaminate persists its decoded input (the batch's only
+        // consumer) and tracks it under this stream's session, so the
+        // scope must release it or every micro-batch leaks one frame
+        val dedupMark = graft.operators.Dedup.trackMark(spark)
         try {
-          val hashes = stats(spark, b).select(col("doc_id"), col(hashCol))
+          val hashes = stats(spark, batch.toDF())
+            .select(col("doc_id"), col(hashCol))
           graft.operators.Fingerprints
             .decontaminate(hashes, evalHashes, hashCol, maxHamming)
             .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        } finally { b.unpersist(); () }
+        } finally {
+          graft.operators.Dedup.releaseSince(spark, dedupMark)
+          ()
+        }
       }
   }
 

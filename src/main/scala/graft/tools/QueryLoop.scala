@@ -1,9 +1,9 @@
 package graft.tools
 
 /** Local profiling driver: run ANY catalog query in a loop so jcmd
-  * Thread.print sampling can attribute its cost (generalizes
-  * MinhashLoop; see SCALE.md round-8 method; not part of the driver
-  * contract). Usage: QueryLoop <queryName> [runs]
+  * Thread.print sampling can attribute its cost (see SCALE.md round-8
+  * method; not part of the driver contract).
+  * Usage: QueryLoop <queryName> [runs]
   */
 object QueryLoop {
   def main(args: Array[String]): Unit = {

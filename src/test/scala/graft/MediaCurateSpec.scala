@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Images
 import graft.pipeline.MediaCurate
+import graft.pipeline.MediaCurate.{AudioGates, ImageGates, VideoGates}
 import graft.tables.Tables
 
 /** The image curation pipeline: gate liveness, precedence, the flat
@@ -13,8 +14,8 @@ class MediaCurateSpec extends AnyFunSuite {
   private val dir = SparkTestSession.sf0001
 
   test("labeled frame: every doc accounted, live gates, keeper set == survivors' keepers") {
-    val labeled = MediaCurate.curateImages(spark,
-      Images.synthesize(spark, Tables.documents(spark, dir)))
+    val labeled = MediaCurate.curate(spark,
+      Images.synthesize(spark, Tables.documents(spark, dir)), ImageGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(labeled.size === 500, "one label per input image")
@@ -58,8 +59,8 @@ class MediaCurateSpec extends AnyFunSuite {
       // constant luminance 127 -> contrast 0 -> flat, regardless of dims
       (id, Images.encodePng(16, 16, Array.fill(256)(127)))
     }
-    val labeled = MediaCurate.curateImages(spark,
-        flatImgs.toDF("doc_id", "img"))
+    val labeled = MediaCurate.curate(spark,
+        flatImgs.toDF("doc_id", "img"), ImageGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(labeled.size === 8 && labeled.values.forall(_ == "flat"),
@@ -67,8 +68,8 @@ class MediaCurateSpec extends AnyFunSuite {
   }
 
   test("audio labeled frame: every clip accounted, live gates, precedence matches a reference") {
-    val labeled = MediaCurate.curateAudio(spark,
-      graft.operators.Audio.synthesize(spark, Tables.documents(spark, dir)))
+    val labeled = MediaCurate.curate(spark,
+      graft.operators.Audio.synthesize(spark, Tables.documents(spark, dir)), AudioGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(labeled.size === 500)
@@ -104,8 +105,8 @@ class MediaCurateSpec extends AnyFunSuite {
       (id, graft.operators.Audio.encode(8000, Array.fill(600)(3),
         javax.sound.sampled.AudioFileFormat.Type.WAVE))
     }
-    val labeled = MediaCurate.curateAudio(spark,
-        silentClips.toDF("doc_id", "audio"))
+    val labeled = MediaCurate.curate(spark,
+        silentClips.toDF("doc_id", "audio"), AudioGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(labeled.size === 6 && labeled.values.forall(_ == "silent"),
@@ -119,10 +120,10 @@ class MediaCurateSpec extends AnyFunSuite {
       graft.operators.Audio.synthesize(spark, docs))
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), r.getString(2), r.getString(3)))).toMap
-    val img = MediaCurate.curateImages(spark, Images.synthesize(spark, docs))
+    val img = MediaCurate.curate(spark, Images.synthesize(spark, docs), ImageGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val aud = MediaCurate.curateAudio(spark,
-      graft.operators.Audio.synthesize(spark, docs))
+    val aud = MediaCurate.curate(spark,
+      graft.operators.Audio.synthesize(spark, docs), AudioGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(media.size === 500)
@@ -143,8 +144,8 @@ class MediaCurateSpec extends AnyFunSuite {
   }
 
   test("video labeled frame: every doc accounted, live gates, precedence matches synthParams") {
-    val labeled = MediaCurate.curateVideo(spark,
-      graft.operators.Video.synthesize(spark, Tables.documents(spark, dir)))
+    val labeled = MediaCurate.curate(spark,
+      graft.operators.Video.synthesize(spark, Tables.documents(spark, dir)), VideoGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(labeled.size === 500, "one label per input video")
@@ -190,7 +191,7 @@ class MediaCurateSpec extends AnyFunSuite {
       2L -> goodBytes.take(40), // truncated mid-header
       3L -> hugeLen,
       103L -> goodBytes).toDF("doc_id", "video")
-    val labeled = MediaCurate.curateVideo(spark, vids)
+    val labeled = MediaCurate.curate(spark, vids, VideoGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(labeled(1L) === "corrupt" && labeled(2L) === "corrupt" &&
@@ -206,13 +207,13 @@ class MediaCurateSpec extends AnyFunSuite {
       graft.operators.Video.synthesize(spark, docs))
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), r.getString(2), r.getString(3), r.getString(4)))).toMap
-    val img = MediaCurate.curateImages(spark, Images.synthesize(spark, docs))
+    val img = MediaCurate.curate(spark, Images.synthesize(spark, docs), ImageGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val aud = MediaCurate.curateAudio(spark,
-      graft.operators.Audio.synthesize(spark, docs))
+    val aud = MediaCurate.curate(spark,
+      graft.operators.Audio.synthesize(spark, docs), AudioGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val vid = MediaCurate.curateVideo(spark,
-      graft.operators.Video.synthesize(spark, docs))
+    val vid = MediaCurate.curate(spark,
+      graft.operators.Video.synthesize(spark, docs), VideoGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(media.size === 500)
@@ -263,7 +264,7 @@ class MediaCurateSpec extends AnyFunSuite {
       1L -> "not an image at all".getBytes("US-ASCII"),
       2L -> goodImg.take(10), // truncated mid-header
       3L -> goodImg).toDF("doc_id", "img")
-    val imgLabels = MediaCurate.curateImages(spark, imgs)
+    val imgLabels = MediaCurate.curate(spark, imgs, ImageGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(imgLabels(1L) === "corrupt" && imgLabels(2L) === "corrupt",
@@ -282,7 +283,7 @@ class MediaCurateSpec extends AnyFunSuite {
       1L -> "definitely not audio".getBytes("US-ASCII"),
       2L -> goodClip.take(12),
       3L -> goodClip).toDF("doc_id", "audio")
-    val audLabels = MediaCurate.curateAudio(spark, clips)
+    val audLabels = MediaCurate.curate(spark, clips, AudioGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(audLabels(1L) === "corrupt" && audLabels(2L) === "corrupt",
@@ -330,23 +331,18 @@ class MediaCurateSpec extends AnyFunSuite {
   }
 
   test("bad thresholds and lossy hamming caps are refused") {
-    val imgs = Images.synthesize(spark, Tables.documents(spark, dir))
-    assert(intercept[IllegalArgumentException] {
-      MediaCurate.curateImages(spark, imgs, minPixels = 0)
-    }.getMessage.contains("bad gate thresholds"))
-    assert(intercept[IllegalArgumentException] {
-      MediaCurate.curateImages(spark, imgs, minMean = 200, maxMean = 100)
-    }.getMessage.contains("bad gate thresholds"))
-    assert(intercept[IllegalArgumentException] {
-      MediaCurate.curateImages(spark, imgs, maxHamming = 4)
-    }.getMessage.contains("recall-lossless"))
-    val clips = graft.operators.Audio.synthesize(spark,
-      Tables.documents(spark, dir))
-    assert(intercept[IllegalArgumentException] {
-      MediaCurate.curateAudio(spark, clips, minSamples = 0)
-    }.getMessage.contains("bad gate thresholds"))
-    assert(intercept[IllegalArgumentException] {
-      MediaCurate.curateAudio(spark, clips, maxHamming = 5)
-    }.getMessage.contains("recall-lossless"))
+    // refused when the gate value is built, before any work on either path
+    def refused(msg: String)(g: => MediaCurate.Gates): Unit =
+      assert(intercept[IllegalArgumentException](g).getMessage.contains(msg))
+    refused("bad gate thresholds")(ImageGates(minPixels = 0))
+    refused("bad gate thresholds")(ImageGates(minMean = 200, maxMean = 100))
+    refused("recall-lossless")(ImageGates(maxHamming = 4))
+    refused("bad gate thresholds")(AudioGates(minSamples = 0))
+    refused("recall-lossless")(AudioGates(maxHamming = 5))
+    refused("thresholds must be positive")(AudioGates(clipLevel = 0))
+    refused("bad gate thresholds")(VideoGates(minFps = 0))
+    refused("bad gate thresholds")(VideoGates(minFps = 61, maxFps = 60))
+    refused("bad gate thresholds")(VideoGates(minFrames = 0))
+    refused("recall-lossless")(VideoGates(maxHamming = 4))
   }
 }

@@ -1146,35 +1146,45 @@ class StreamingSpec extends AnyFunSuite {
   test("incremental image-curation sink == batch MediaCurate labeled frame") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val regPath = "/tmp/graft_test_imgcurate_reg"
-    val outPath = "/tmp/graft_test_imgcurate_out"
-    for (p <- Seq(regPath, outPath))
-      new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively()
+    import graft.pipeline.MediaCurate.ImageGates
     val imgRows = graft.operators.Images
       .synthesize(spark, Tables.documents(spark, dir))
       .orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toSeq
-    val stream = MemoryStream[(Long, Array[Byte])]
-    val q = graft.streaming.StreamingPipelines
-      .imageCurateSink(stream.toDF().toDF("doc_id", "img"), regPath, outPath)
-      .start()
-    val (h1, h2) = imgRows.splitAt(imgRows.size / 2)
-    stream.addData(h1); q.processAllAvailable()
-    stream.addData(h2); q.processAllAvailable()
-    q.stop()
-    val got = spark.read.parquet(outPath).select("doc_id", "drop_reason")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val want = graft.pipeline.MediaCurate.curateImages(spark,
-      graft.operators.Images.synthesize(spark, Tables.documents(spark, dir)))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    graft.pipeline.Curate.releaseCaches(spark)
-    assert(got.size === imgRows.size, "one label per streamed image")
-    assert(got === want)
-    // the registry path must have been exercised: some near-dup loser
-    // sits in the second half with its keeper in the first
-    val losers = want.filter(_._2 == "near_dup").keySet
-    assert(losers.exists(_ >= imgRows.size / 2),
-      "no cross-batch near-dup losers — registry path untested")
+    // the defaults, and a narrower brightness window off them
+    val gates = Seq(ImageGates(), ImageGates(minMean = 124, maxMean = 132))
+    val wants = gates.map { g =>
+      val regPath = s"/tmp/graft_test_imgcurate_reg_${g.minMean}"
+      val outPath = s"/tmp/graft_test_imgcurate_out_${g.minMean}"
+      for (p <- Seq(regPath, outPath))
+        new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively()
+      val stream = MemoryStream[(Long, Array[Byte])]
+      val q = graft.streaming.StreamingPipelines
+        .mediaCurateSink(stream.toDF().toDF("doc_id", "img"), regPath, outPath, g)
+        .start()
+      val (h1, h2) = imgRows.splitAt(imgRows.size / 2)
+      stream.addData(h1); q.processAllAvailable()
+      stream.addData(h2); q.processAllAvailable()
+      q.stop()
+      val got = spark.read.parquet(outPath).select("doc_id", "drop_reason")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val want = graft.pipeline.MediaCurate.curate(spark,
+        graft.operators.Images.synthesize(spark, Tables.documents(spark, dir)), g)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      graft.pipeline.Curate.releaseCaches(spark)
+      assert(got.size === imgRows.size, "one label per streamed image")
+      assert(got === want)
+      // the registry path must have been exercised: some near-dup loser
+      // sits in the second half with its keeper in the first
+      val losers = want.filter(_._2 == "near_dup").keySet
+      assert(losers.exists(_ >= imgRows.size / 2),
+        "no cross-batch near-dup losers — registry path untested")
+      want
+    }
+    // liveness: the non-default window fires the brightness gate on
+    // images the defaults pass
+    val brightness = wants.map(_.values.count(_ == "brightness"))
+    assert(brightness(1) > brightness(0), s"brightness drops $brightness")
   }
 
   test("incremental audio-curation sink == batch MediaCurate labeled frame") {
@@ -1190,7 +1200,8 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toSeq
     val stream = MemoryStream[(Long, Array[Byte])]
     val q = graft.streaming.StreamingPipelines
-      .audioCurateSink(stream.toDF().toDF("doc_id", "audio"), regPath, outPath)
+      .mediaCurateSink(stream.toDF().toDF("doc_id", "audio"), regPath, outPath,
+        graft.pipeline.MediaCurate.AudioGates())
       .start()
     val (h1, h2) = clipRows.splitAt(clipRows.size / 2)
     stream.addData(h1); q.processAllAvailable()
@@ -1198,8 +1209,9 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
     val got = spark.read.parquet(outPath).select("doc_id", "drop_reason")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val want = graft.pipeline.MediaCurate.curateAudio(spark,
-      graft.operators.Audio.synthesize(spark, Tables.documents(spark, dir)))
+    val want = graft.pipeline.MediaCurate.curate(spark,
+      graft.operators.Audio.synthesize(spark, Tables.documents(spark, dir)),
+      graft.pipeline.MediaCurate.AudioGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(got.size === clipRows.size && got === want)
@@ -1259,7 +1271,8 @@ class StreamingSpec extends AnyFunSuite {
     val corrupt2 = (9002L, vidRows.head._2.take(40))
     val stream = MemoryStream[(Long, Array[Byte])]
     val q = graft.streaming.StreamingPipelines
-      .videoCurateSink(stream.toDF().toDF("doc_id", "video"), regPath, outPath)
+      .mediaCurateSink(stream.toDF().toDF("doc_id", "video"), regPath, outPath,
+        graft.pipeline.MediaCurate.VideoGates())
       .start()
     val (h1, h2) = vidRows.splitAt(vidRows.size / 2)
     stream.addData(h1 :+ corrupt1); q.processAllAvailable()
@@ -1267,8 +1280,9 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
     val got = spark.read.parquet(outPath).select("doc_id", "drop_reason")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val want = graft.pipeline.MediaCurate.curateVideo(spark,
-      graft.operators.Video.synthesize(spark, Tables.documents(spark, dir)))
+    val want = graft.pipeline.MediaCurate.curate(spark,
+      graft.operators.Video.synthesize(spark, Tables.documents(spark, dir)),
+      graft.pipeline.MediaCurate.VideoGates())
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     graft.pipeline.Curate.releaseCaches(spark)
     assert(got.size === vidRows.size + 2, "one label per streamed video")
@@ -1298,6 +1312,7 @@ class StreamingSpec extends AnyFunSuite {
       .orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toSeq
     val stream = MemoryStream[(Long, Array[Byte])]
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     val q = graft.streaming.StreamingPipelines
       .imageDecontaminateSink(stream.toDF().toDF("doc_id", "img"), evalDf, outPath)
       .start()
@@ -1305,6 +1320,11 @@ class StreamingSpec extends AnyFunSuite {
     stream.addData(h1); q.processAllAvailable()
     stream.addData(h2); q.processAllAvailable()
     q.stop()
+    // every micro-batch's cached frames are released by the sink itself
+    // (they are tracked under the stream's session, which
+    // Curate.releaseCaches(spark) never reaches)
+    assert(spark.sparkContext.getPersistentRDDs.size === cachedBefore,
+      "the decontamination sink leaked cached frames")
     val got = spark.read.parquet(outPath).select("doc_id", "keep")
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     val want = graft.operators.Images.decontaminate(spark,
