@@ -78,15 +78,19 @@ object Dedup {
 
   /** Release only the frames attributed to scope `mark` — the caller's own
     * — and close the scope; a concurrent caller's frames (other scopes,
-    * other threads) are untouched. */
+    * other threads) are untouched. Scope tokens are unique, so the scope
+    * is released on every session: a frame derived from an input built
+    * on another session (a streaming sink's static benchmark) is tracked
+    * under that input's session, not the caller's. */
   def releaseSince(spark: SparkSession, mark: Long): Int = synchronized {
     purgeStopped()
     openScopes.set(openScopes.get().filterNot(_ == mark))
-    val frames = tracked.getOrElse(spark, Vector.empty)
-    val (drop, keep) = frames.partition(_._1 == mark)
-    drop.foreach(_._2.unpersist(blocking = false))
-    if (keep.isEmpty) tracked.remove(spark) else tracked(spark) = keep
-    drop.size
+    tracked.keys.toSeq.map { s =>
+      val (drop, keep) = tracked(s).partition(_._1 == mark)
+      drop.foreach(_._2.unpersist(blocking = false))
+      if (keep.isEmpty) tracked.remove(s) else tracked(s) = keep
+      drop.size
+    }.sum
   }
 
   /** Exact duplicate groups by normalized-text fingerprint: one row per
@@ -426,8 +430,8 @@ object Dedup {
     * of this operation is CurateStream's registry join, which shares the
     * banding and verify stages. */
   def dedupAgainst(docs: DataFrame, reference: DataFrame,
-      numSigs: Int = 8, rowsPerBand: Int = 2, threshold: Double = 0.8,
-      maxBucket: Int = 1000): DataFrame =
+      numSigs: Int = Lsh.NumSigs, rowsPerBand: Int = Lsh.RowsPerBand,
+      threshold: Double = Lsh.Threshold, maxBucket: Int = Lsh.MaxBucket): DataFrame =
     dedupAgainstIndex(docs,
       prepareReference(reference, numSigs, rowsPerBand, threshold, maxBucket))
 
@@ -442,8 +446,8 @@ object Dedup {
       numSigs: Int, rowsPerBand: Int, threshold: Double)
 
   def prepareReference(reference: DataFrame,
-      numSigs: Int = 8, rowsPerBand: Int = 2, threshold: Double = 0.8,
-      maxBucket: Int = 1000): ReferenceIndex = {
+      numSigs: Int = Lsh.NumSigs, rowsPerBand: Int = Lsh.RowsPerBand,
+      threshold: Double = Lsh.Threshold, maxBucket: Int = Lsh.MaxBucket): ReferenceIndex = {
     val fpRef = track(reference
       .select(coalesce(fingerprint(col("text")), lit("null:")).as("fp"))
       .distinct().persist())

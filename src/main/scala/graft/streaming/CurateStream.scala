@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -59,107 +59,61 @@ object CurateStream {
     *   `stripLineFreq` has no twin here (see Curate.prepare). */
   def sink(docs: DataFrame, registryPath: String, outPath: String,
       gates: Curate.Gates = Curate.Gates(), compactEvery: Int = 16): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // refuse a registry whose hash arrays predate the sorted-array
-        // contract (fused verify would silently mis-score)
-        Registry.ensureFormat(spark, registryPath, "hashes-sorted-v2")
-        // bound BOTH read surfaces before this batch's reads: the
-        // three-table registry folds jointly (a snapshot only holds ids
-        // committed in fps AND bands AND hashes), and the labeled output
-        // folds as its own single-table group so keptView/labeledView stay
-        // O(snapshot + compactEvery dirs) under continuous ingestion
-        Registry.maybeCompact(spark, registryPath,
-          Seq(s"$registryPath/fps", s"$registryPath/bands", s"$registryPath/hashes"),
-          upToExclusive = batchId, every = compactEvery)
-        Registry.maybeCompact(spark, outPath, Seq(outPath),
-          upToExclusive = batchId, every = compactEvery)
-        val dedupMark = Dedup.trackMark(spark)
-        // every frame persisted in this batch body lands here and is
-        // released in the one finally — a failed batch must not leak
-        // InMemoryRelations under the at-least-once retry contract
-        // (the excise pre-transform's registry-tracked persists release
-        // there too)
-        val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        def keep(df: DataFrame): DataFrame = { persisted += df.persist(); df }
-        val b = keep(Curate.prepare(batch.toDF(), gates))
-        // NULL-text sentinel: fingerprint(NULL) is NULL, and the registry
-        // equi-join below is null-UNSAFE — without the sentinel a null-text
-        // doc in a later batch never matches a null-fp doc in the registry,
-        // while batch exactGroups DOES group NULL fingerprints into one
-        // group (stream≡batch would break for null-text docs split across
-        // batches). "null:" cannot collide with a 32-hex md5.
-        val fps = keep(b.select(col("doc_id"),
-          coalesce(graft.functions.TextFunctions.fingerprint(col("text")),
-            lit("null:")).as("fp")))
-        try {
-          // 1. exact dups: fingerprint seen in the registry, or a
-          // non-first occurrence within this batch (min doc_id keeps)
-          val vFps = Registry.view(spark, registryPath, s"$registryPath/fps", batchId)
-          val dupCross =
-            if (vFps.isEmpty) b.select(col("doc_id")).limit(0)
-            else fps.join(
-              spark.read.parquet(vFps.paths: _*)
-                .select(col("fp")).distinct(), "fp")
-              .select(col("doc_id"))
-          val wFp = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
-          val dupIn = fps.withColumn("__rn", row_number().over(wFp))
-            .filter(col("__rn") > 1).select(col("doc_id"))
-          val exactDropped = dupCross.union(dupIn).distinct()
-            .localCheckpoint(true)
-          val se = keep(b.join(exactDropped, Seq("doc_id"), "left_anti"))
+    // bound BOTH read surfaces before this batch's reads: the
+    // three-table registry folds jointly (a snapshot only holds ids
+    // committed in fps AND bands AND hashes), and the labeled output
+    // folds as its own single-table group so keptView/labeledView stay
+    // O(snapshot + compactEvery dirs) under continuous ingestion
+    Registry.sink(docs, compactEvery,
+        Registry.Group(registryPath,
+          Seq(s"$registryPath/fps", s"$registryPath/bands", s"$registryPath/hashes")),
+        Registry.Group(outPath)) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // refuse a registry whose hash arrays predate the sorted-array
+      // contract (fused verify would silently mis-score)
+      Registry.ensureFormat(spark, registryPath, "hashes-sorted-v2")
+      // every frame persisted here (and the excise pre-transform's) is
+      // tracked in the sink's scope, released also when the batch fails
+      val b = Dedup.track(Curate.prepare(batch, gates).persist())
+      // NULL-text sentinel: fingerprint(NULL) is NULL, and the registry
+      // equi-join below is null-UNSAFE — without the sentinel a null-text
+      // doc in a later batch never matches a null-fp doc in the registry,
+      // while batch exactGroups DOES group NULL fingerprints into one
+      // group (stream≡batch would break for null-text docs split across
+      // batches). "null:" cannot collide with a 32-hex md5.
+      val fps = Dedup.track(b.select(col("doc_id"),
+        coalesce(graft.functions.TextFunctions.fingerprint(col("text")),
+          lit("null:")).as("fp")).persist())
+      // 1. exact dups: fingerprint seen in the registry, or a
+      // non-first occurrence within this batch (min doc_id keeps)
+      val vFps = Registry.view(spark, registryPath, s"$registryPath/fps", batchId)
+      val dupCross =
+        if (vFps.isEmpty) b.select(col("doc_id")).limit(0)
+        else fps.join(
+          spark.read.parquet(vFps.paths: _*)
+            .select(col("fp")).distinct(), "fp")
+          .select(col("doc_id"))
+      val wFp = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
+      val dupIn = fps.withColumn("__rn", row_number().over(wFp))
+        .filter(col("__rn") > 1).select(col("doc_id"))
+      val exactDropped = Dedup.track(dupCross.union(dupIn).distinct().persist())
+      val se = Dedup.track(b.join(exactDropped, Seq("doc_id"), "left_anti").persist())
 
-          // 2. near-dups among exact survivors: in-batch pairs + registry
-          // verify, the minhashDedupSink shape over one shingle scan
-          val sh = keep(Dedup.shingleSets(se))
-          val bands = keep(Dedup.bandsFromShingles(sh))
-          val inBatch = Dedup.minhashPairsFromTables(sh, bands,
-            Dedup.Lsh.Threshold, Dedup.Lsh.MaxBucket)
-            .select(col("doc_b").as("doc_id")).distinct()
-          val vBands = Registry.view(spark, registryPath, s"$registryPath/bands", batchId)
-          val vHashes = Registry.view(spark, registryPath, s"$registryPath/hashes", batchId)
-          // dirs above the watermark keep the both-tables-committed
-          // intersection; snapshots are jointly consistent by fold
-          val served = vBands.dirIds.intersect(vHashes.dirIds)
-          val crossLosers =
-            if (vBands.snapshotPath.isEmpty && served.isEmpty)
-              b.select(col("doc_id")).limit(0)
-            else {
-              val regBands = spark.read
-                .parquet(vBands.pathsFor(served): _*)
-                .select(col("doc_id").as("doc_a"), col("b"), col("band_key")).persist()
-              try {
-                val hotKeys = regBands.groupBy(col("b"), col("band_key"))
-                  .agg(count(lit(1)).as("__bs")).filter(col("__bs") > Dedup.Lsh.MaxBucket)
-                  .select(col("b"), col("band_key"))
-                val cand = bands.join(regBands, Seq("b", "band_key"))
-                  .join(hotKeys, Seq("b", "band_key"), "left_anti")
-                  .select(col("doc_a"), col("doc_id").as("doc_b")).distinct()
-                val regHashes = spark.read
-                  .parquet(vHashes.pathsFor(served): _*)
-                  .select(col("doc_id").as("doc_a"), col("hashes").as("h_a"))
-                Dedup.jaccardVerify(cand, regHashes,
-                    sh.select(col("doc_id").as("doc_b"), col("hashes").as("h_b")),
-                    Dedup.Lsh.Threshold)
-                  .select(col("doc_b").as("doc_id")).distinct()
-                  .localCheckpoint(true)
-              } finally { regBands.unpersist(blocking = false); () }
-            }
-          val nearDropped = inBatch.union(crossLosers).distinct()
-          Curate.label(b, gates, exactDropped, nearDropped)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          fps.write.mode("overwrite").parquet(s"$registryPath/fps/batch=$batchId")
-          bands.write.mode("overwrite").parquet(s"$registryPath/bands/batch=$batchId")
-          sh.select(col("doc_id"), col("hashes"))
-            .write.mode("overwrite").parquet(s"$registryPath/hashes/batch=$batchId")
-        } finally {
-          persisted.foreach(_.unpersist(blocking = false))
-          Dedup.releaseSince(spark, dedupMark)
-          ()
-        }
-      }
+      // 2. near-dups among exact survivors: in-batch pairs + the registry
+      // probe, the minhashDedupSink shape over one shingle scan
+      val sh = Dedup.track(Dedup.shingleSets(se).persist())
+      val bands = Dedup.track(Dedup.bandsFromShingles(sh).persist())
+      val inBatch = Dedup.minhashPairsFromTables(sh, bands,
+          Dedup.Lsh.Threshold, Dedup.Lsh.MaxBucket)
+        .select(col("doc_b").as("doc_id")).distinct()
+      val nearDropped = inBatch
+        .union(Registry.minhashProbe(spark, registryPath, batchId, sh, bands)).distinct()
+      Seq(
+        outPath -> Curate.label(b, gates, exactDropped, nearDropped),
+        s"$registryPath/fps" -> fps,
+        s"$registryPath/bands" -> bands,
+        s"$registryPath/hashes" -> sh.select(col("doc_id"), col("hashes")))
+    }
 
   /** Every label the sink has emitted so far — the streaming accounting
     * surface (union of batch accountings). Serves the compacted snapshot
@@ -169,19 +123,16 @@ object CurateStream {
     * directory. Read through this (not a whole-dir parquet read): once
     * compaction has folded, `outPath` holds snapshot AND batch dirs. */
   def labeledView(spark: org.apache.spark.sql.SparkSession, outPath: String): DataFrame = {
-    val v = Registry.view(spark, outPath, outPath)
-    if (v.isEmpty) {
-      // Curate.label's output schema (analysis only, no job), nullable
-      // like every column read back from parquet
+    // for an empty registry: Curate.label's output schema (analysis only,
+    // no job), nullable like every column read back from parquet
+    def labeled = {
       val none = spark.range(0)
         .select(col("id").as("doc_id"), lit(null).cast("string").as("text"))
-      val labeled = Curate.label(none, Curate.Gates(), none, none).schema
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(labeled.map(_.copy(nullable = true))))
-    } else
-      spark.read.parquet(v.paths: _*)
-        .select(col("doc_id"), col("text"), col("pred_lang"), col("quality"),
-          col("n_tokens"), col("drop_reason"))
+      Curate.label(none, Curate.Gates(), none, none).schema
+    }
+    Registry.read(spark, outPath, outPath, StructType(labeled.map(_.copy(nullable = true))))
+      .select(col("doc_id"), col("text"), col("pred_lang"), col("quality"),
+        col("n_tokens"), col("drop_reason"))
   }
 
   /** Everything the sink has kept so far (the curated corpus view). */
@@ -282,19 +233,9 @@ object CurateStream {
   def lmBucketSink(docs: DataFrame, model: TextAnalysis.LmModel,
       t0: Long, t1: Long, outPath: String,
       compactEvery: Int = 16): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        Registry.maybeCompact(spark, outPath, Seq(outPath),
-          upToExclusive = batchId, every = compactEvery)
-        val mark = Dedup.trackMark(spark)
-        try {
-          TextAnalysis.lmBucketsFrozen(
-              TextAnalysis.scoreLm(batch.toDF(), model), t0, t1)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        } finally { Dedup.releaseSince(spark, mark); () }
-      }
+    Registry.sink(docs, compactEvery, Registry.Group(outPath)) { (batch, _) =>
+      Seq(outPath -> TextAnalysis.lmBucketsFrozen(TextAnalysis.scoreLm(batch, model), t0, t1))
+    }
 
   /** Every frozen-tertile label the bucket sink has emitted so far —
     * the continuous head/middle/tail mix surface a curriculum or
@@ -302,14 +243,10 @@ object CurateStream {
     * [[labeledView]] (snapshot + _SUCCESS-committed batch dirs only). */
   def lmBucketView(spark: org.apache.spark.sql.SparkSession,
       outPath: String): DataFrame = {
-    val v = Registry.view(spark, outPath, outPath)
-    if (v.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+    import org.apache.spark.sql.types._
+    Registry.read(spark, outPath, outPath,
         StructType(Seq(StructField("doc_id", LongType),
           StructField("lm_floor", LongType), StructField("bucket", StringType))))
-    } else
-      spark.read.parquet(v.paths: _*)
-        .select(col("doc_id"), col("lm_floor"), col("bucket"))
+      .select(col("doc_id"), col("lm_floor"), col("bucket"))
   }
 }

@@ -1,7 +1,11 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
+import graft.operators.{Dedup, Fingerprints}
 
 /** Bounded-state protocol for the incremental sinks' parquet registries.
   *
@@ -52,6 +56,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * permanently half-committed id (abandoned stream) is never folded and
   * never served — the same "both tables committed" rule the dir readers
   * already apply.
+  *
+  * Sink protocol ([[sink]]): every `batch=<id>` sink in this package runs
+  * its micro-batches through one scaffold — compaction, one Dedup cache
+  * scope, and the overwrite of each output table's `batch=<id>` dir —
+  * so a sink body only computes the frames to write. The overwrite is
+  * what makes a foreachBatch retry idempotent (Structured Streaming's
+  * exactly-once-by-batch-id sink, SIGMOD'18 §4).
   */
 private[graft] object Registry {
 
@@ -195,5 +206,148 @@ private[graft] object Registry {
     val base = new Path(path)
     val fs = fsOf(spark, base)
     stale.foreach(id => fs.delete(new Path(path, s"batch=$id"), true))
+  }
+
+  /** The value of the one `_<key>=<value>` marker under `groupBase` — a
+    * setting every writer and reader of the registry must share (sketch
+    * shape, ANN model): mixing rows written under two values would be
+    * silent garbage, so a second value fails LOUD (the BucketedUpsert
+    * layout-marker rule). With `want`, the marker must carry that value
+    * ("<what> mismatch" otherwise), and `createIfAbsent` pins it on a
+    * registry that has none; without `want` the marker is only read. */
+  def marker(spark: SparkSession, groupBase: String, key: String, what: String,
+      want: Option[String] = None, createIfAbsent: Boolean = false): String = {
+    val base = new Path(groupBase)
+    val fs = fsOf(spark, base)
+    val prefix = s"_$key="
+    val found =
+      if (fs.exists(base))
+        fs.listStatus(base).map(_.getPath.getName).filter(_.startsWith(prefix)).toSeq
+      else Seq.empty
+    (found, want) match {
+      case (Seq(), Some(w)) if createIfAbsent =>
+        fs.mkdirs(base)
+        fs.create(new Path(base, prefix + w), true).close()
+        w
+      case (Seq(), _) =>
+        throw new IllegalStateException(s"no $what marker under $groupBase")
+      case (Seq(one), _) =>
+        val got = one.stripPrefix(prefix)
+        want.foreach(w => require(got == w,
+          s"$what mismatch under $groupBase: registry was built with $one, " +
+            s"caller holds $prefix$w — rebuild the registry for a new $what"))
+        got
+      case (many, _) =>
+        throw new IllegalStateException(
+          s"conflicting $what markers under $groupBase: ${many.mkString(", ")}")
+    }
+  }
+
+  /** Every row committed to `table` (snapshot + committed batch dirs), or
+    * an empty frame of `schema` before the first commit. */
+  def read(spark: SparkSession, groupBase: String, table: String,
+      schema: => StructType): DataFrame = {
+    val v = view(spark, groupBase, table)
+    if (v.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.parquet(v.paths: _*)
+  }
+
+  /** One registry group a sink folds (see [[maybeCompact]]): its base, its
+    * tables, and an optional per-table fold. */
+  final case class Group(base: String, tables: Seq[String],
+      fold: Map[String, DataFrame => DataFrame] = Map.empty)
+
+  object Group {
+    /** A one-table group that is its own base. */
+    def apply(table: String): Group = Group(table, Seq(table))
+  }
+
+  /** The micro-batch protocol of every `batch=<id>` sink. Per batch:
+    *  1. fold each group below this batch id every `compactEvery` batches;
+    *  2. open one Dedup tracking scope;
+    *  3. run `body`, which returns the (table, frame) pairs to write and
+    *     persists only through `Dedup.track`, so the scope owns its caches;
+    *  4. overwrite each `table/batch=<id>` in the returned order (a retry
+    *     rewrites the same dirs — idempotent; readers that serve only
+    *     jointly-committed ids rely on the order, e.g. spans before meta);
+    *  5. release the scope, also when the batch fails.
+    * The raw batch is never persisted here: a body persists what it reads
+    * more than once. */
+  def sink(df: DataFrame, compactEvery: Int, groups: Group*)(
+      body: (DataFrame, Long) => Seq[(String, DataFrame)]): DataStreamWriter[Row] =
+    df.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        runBatch(batch.toDF(), batchId, compactEvery, groups)(body)
+      }
+
+  /** A `batch=<id>` sink with no registry group (steps 2–5 of [[sink]]). */
+  def sink(df: DataFrame)(
+      body: (DataFrame, Long) => Seq[(String, DataFrame)]): DataStreamWriter[Row] =
+    sink(df, compactEvery = 1)(body)
+
+  /** One micro-batch of [[sink]]. */
+  private[graft] def runBatch(batch: DataFrame, batchId: Long, compactEvery: Int,
+      groups: Seq[Group])(body: (DataFrame, Long) => Seq[(String, DataFrame)]): Unit = {
+    val spark = batch.sparkSession
+    groups.foreach(g => maybeCompact(spark, g.base, g.tables,
+      upToExclusive = batchId, every = compactEvery, fold = g.fold))
+    val mark = Dedup.trackMark(spark)
+    try body(batch, batchId).foreach { case (table, out) =>
+      out.write.mode("overwrite").parquet(s"$table/batch=$batchId")
+    } finally { Dedup.releaseSince(spark, mark); () }
+  }
+
+  /** Cross-batch MinHash losers: the docs of this batch's shingle table
+    * `sh` (and its `bands`) that Jaccard-verify >= Lsh.Threshold against
+    * a doc of the `bands` + `hashes` registry under `registryPath` —
+    * earlier batches only (own id excluded), dirs committed in BOTH
+    * tables. Band buckets holding > Lsh.MaxBucket registry docs
+    * (boilerplate) are left out, mirroring minhashLshPairs' in-batch cap.
+    * Returns (doc_id). */
+  def minhashProbe(spark: SparkSession, registryPath: String, batchId: Long,
+      sh: DataFrame, bands: DataFrame): DataFrame = {
+    val vb = view(spark, registryPath, s"$registryPath/bands", batchId)
+    val vh = view(spark, registryPath, s"$registryPath/hashes", batchId)
+    // dirs above the watermark still need the both-tables-committed
+    // intersection; the snapshots are jointly consistent by fold
+    val served = vb.dirIds.intersect(vh.dirIds)
+    if (vb.snapshotPath.isEmpty && served.isEmpty) sh.select(col("doc_id")).limit(0)
+    else {
+      val regBands = Dedup.track(spark.read.parquet(vb.pathsFor(served): _*)
+        .select(col("doc_id").as("doc_a"), col("b"), col("band_key")).persist())
+      val hotKeys = regBands.groupBy(col("b"), col("band_key"))
+        .agg(count(lit(1)).as("__bs")).filter(col("__bs") > Dedup.Lsh.MaxBucket)
+        .select(col("b"), col("band_key"))
+      val cand = bands.join(regBands, Seq("b", "band_key"))
+        .join(hotKeys, Seq("b", "band_key"), "left_anti")
+        .select(col("doc_a"), col("doc_id").as("doc_b")).distinct()
+      val regHashes = spark.read.parquet(vh.pathsFor(served): _*)
+        .select(col("doc_id").as("doc_a"), col("hashes").as("h_a"))
+      Dedup.jaccardVerify(cand, regHashes,
+          sh.select(col("doc_id").as("doc_b"), col("hashes").as("h_b")),
+          Dedup.Lsh.Threshold)
+        .select(col("doc_b").as("doc_id")).distinct()
+    }
+  }
+
+  /** Hamming near-dup losers of this batch's fingerprints `fps` (doc_id,
+    * `hashCol`): the later doc of each in-batch pair within `maxHamming`,
+    * plus every doc within `maxHamming` of the one-table registry at
+    * `registryPath` (earlier batches only, own id excluded). Both probes
+    * are the recall-lossless banded joins of Fingerprints. Returns
+    * (doc_id). */
+  def hammingProbe(spark: SparkSession, registryPath: String, batchId: Long,
+      fps: DataFrame, hashCol: String, maxHamming: Int): DataFrame = {
+    val inBatch = Fingerprints.nearDupPairs(fps, hashCol, maxHamming)
+      .select(col("doc_b").as("doc_id"))
+    val v = view(spark, registryPath, registryPath, excludeId = batchId)
+    val vsRegistry =
+      if (v.isEmpty) fps.select(col("doc_id")).limit(0)
+      else Fingerprints.hammingPairsAcross(fps,
+          spark.read.parquet(v.paths: _*).select(col("doc_id"), col(hashCol)),
+          hashCol, maxHamming)
+        .select(col("doc_id"))
+    inBatch.union(vsRegistry).distinct()
   }
 }

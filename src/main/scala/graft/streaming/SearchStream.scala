@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -60,34 +60,23 @@ object SearchStream {
     * dir (exactly-once); compaction folds superseded doc rows away. */
   def searchIndexSink(docs: DataFrame, registryPath: String,
       compactEvery: Int = 16): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        Registry.maybeCompact(spark, registryPath, Seq(table(registryPath)),
-          upToExclusive = batchId, every = compactEvery,
-          fold = Map(table(registryPath) -> (latestDocs _)))
-        docPosts(batch.toDF())
-          .withColumn("__b", lit(batchId))
-          .write.mode("overwrite")
-          .parquet(s"${table(registryPath)}/batch=$batchId")
-        ()
-      }
+    Registry.sink(docs, compactEvery, Registry.Group(registryPath,
+        Seq(table(registryPath)), Map(table(registryPath) -> (latestDocs _)))) {
+      (batch, batchId) =>
+        Seq(table(registryPath) -> docPosts(batch).withColumn("__b", lit(batchId)))
+    }
 
   /** The live postings: snapshot + committed dirs, collapsed to the
     * newest row per doc, exploded to (term, doc_id, tf). */
   def currentPostings(spark: SparkSession, registryPath: String): DataFrame = {
-    val v = Registry.view(spark, registryPath, table(registryPath))
-    if (v.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
-        StructField("term", StringType), StructField("doc_id", LongType),
-        StructField("tf", LongType))))
-    } else
-      latestDocs(spark.read.parquet(v.paths: _*))
-        .select(col("doc_id"), explode(col("posts")).as("p"))
-        .select(col("p.term").as("term"), col("doc_id"),
-          col("p.tf").cast("long").as("tf"))
+    import org.apache.spark.sql.types._
+    val post = StructType(Seq(StructField("term", StringType), StructField("tf", LongType)))
+    latestDocs(Registry.read(spark, registryPath, table(registryPath), StructType(Seq(
+        StructField("doc_id", LongType), StructField("posts", ArrayType(post)),
+        StructField("__b", LongType)))))
+      .select(col("doc_id"), explode(col("posts")).as("p"))
+      .select(col("p.term").as("term"), col("doc_id"),
+        col("p.tf").cast("long").as("tf"))
   }
 
   /** Serve a disjunctive top-k search from the live index: candidate

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import graft.operators.Dedup
 
 /** Structured-Streaming forms of the reference pipelines (SURVEY §2.9):
   * watermarked tumbling windows, and foreachBatch sinks replacing the
@@ -180,73 +181,49 @@ object StreamingPipelines {
     * batches only; own id excluded for retry safety), >= minShared shared
     * fingerprints per (old, new) doc pair, registry-ubiquitous fps
     * (> maxBucket prior docs — boilerplate) excluded. Returns
-    * (old_doc, doc_id); persisted+materialized (registered in the caller's
-    * Dedup scope) with the registry cache released before returning. */
+    * (old_doc, doc_id); its caches are tracked in the caller's Dedup
+    * scope. */
   private def registryPairs(fps: DataFrame, registryPath: String, batchId: Long,
       minShared: Int, maxBucket: Int): DataFrame = {
     val spark = fps.sparkSession
     val v = Registry.view(spark, registryPath, registryPath, excludeId = batchId)
     if (v.isEmpty) fps.select(col("doc_id").as("old_doc"), col("doc_id")).limit(0)
     else {
-      val reg = spark.read.parquet(v.paths: _*)
-        .select(col("doc_id").as("old_doc"), col("fp")).persist()
+      val reg = Dedup.track(spark.read.parquet(v.paths: _*)
+        .select(col("doc_id").as("old_doc"), col("fp")).persist())
       val hotFps = reg.groupBy(col("fp"))
         .agg(count(lit(1)).as("__bs")).filter(col("__bs") > maxBucket)
         .select(col("fp"))
-      val p = fps.join(reg, "fp")
+      Dedup.track(fps.join(reg, "fp")
         .join(hotFps, Seq("fp"), "left_anti")
         .groupBy(col("doc_id"), col("old_doc"))
         .agg(count(lit(1)).as("n"))
         .filter(col("n") >= minShared)
         .select(col("old_doc"), col("doc_id"))
-      val out = graft.operators.Dedup.track(p.persist())
-      out.count()
-      reg.unpersist(blocking = false)
-      out
+        .persist())
     }
   }
 
   def winnowDedupSink(docs: DataFrame, registryPath: String, outPath: String,
       k: Int = 3, w: Int = 4, minShared: Int = 2,
       maxBucket: Int = 1000, compactEvery: Int = 16): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // bound the registry read-set BEFORE this batch's reads: fold
-        // batch dirs below this id into the snapshot every `compactEvery`
-        // batches (Registry scaladoc has the retry/grace contract)
-        Registry.maybeCompact(spark, registryPath, Seq(registryPath),
-          upToExclusive = batchId, every = compactEvery)
-        val dedupMark = graft.operators.Dedup.trackMark(spark)
-        val b = batch.toDF().persist()
-        // materialize the fingerprint table BEFORE exploding — Generate
-        // over the raw winnow chain re-evaluates it per output row
-        // (see Dedup.winnowPairs); the same materialized table feeds the
-        // registry write AND the in-batch pair generation (one scan)
-        val bw = graft.operators.Dedup.winnowTable(b, k, w).persist()
-        val fps = bw.select(col("doc_id"), explode(col("fps")).as("fp")).persist()
-        // a failed batch must still drop its caches and close its Dedup
-        // scope — under the at-least-once retry contract a leak here
-        // accumulates one set of InMemoryRelations per retried failure
-        try {
-          val droppedByRegistry =
-            registryPairs(fps, registryPath, batchId, minShared, maxBucket)
-              .select(col("doc_id")).distinct()
-          val droppedInBatch = graft.operators.Dedup
-            .winnowPairsFromTable(bw, minShared, maxBucket)
-            .select(col("doc_b").as("doc_id")).distinct()
-          val kept = b.join(
-            droppedByRegistry.union(droppedInBatch).distinct(),
-            Seq("doc_id"), "left_anti")
-          kept.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          fps.write.mode("overwrite").parquet(s"$registryPath/batch=$batchId")
-        } finally {
-          fps.unpersist(); bw.unpersist(); b.unpersist()
-          graft.operators.Dedup.releaseSince(spark, dedupMark)
-          ()
-        }
-      }
+    Registry.sink(docs, compactEvery, Registry.Group(registryPath)) { (batch, batchId) =>
+      val b = Dedup.track(batch.persist())
+      // materialize the fingerprint table BEFORE exploding — Generate
+      // over the raw winnow chain re-evaluates it per output row
+      // (see Dedup.winnowPairs); the same materialized table feeds the
+      // registry write AND the in-batch pair generation (one scan)
+      val bw = Dedup.track(Dedup.winnowTable(b, k, w).persist())
+      val fps = Dedup.track(bw.select(col("doc_id"), explode(col("fps")).as("fp")).persist())
+      val droppedByRegistry =
+        registryPairs(fps, registryPath, batchId, minShared, maxBucket)
+          .select(col("doc_id")).distinct()
+      val droppedInBatch = Dedup.winnowPairsFromTable(bw, minShared, maxBucket)
+        .select(col("doc_b").as("doc_id")).distinct()
+      val kept = b.join(droppedByRegistry.union(droppedInBatch).distinct(),
+        Seq("doc_id"), "left_anti")
+      Seq(outPath -> kept, registryPath -> fps)
+    }
 
   /** Incremental MinHash+LSH near-dup removal for continuous ingestion —
     * the streaming twin of Curate's DEFAULT near-dup policy
@@ -255,7 +232,7 @@ object StreamingPipelines {
     * accumulates every seen document's LSH bands
     * (`<registry>/bands/batch=<id>`) and 32-bit shingle-hash arrays
     * (`<registry>/hashes/batch=<id>`); each micro-batch drops documents
-    * that Jaccard-verify >= `threshold` against ANY earlier document
+    * that Jaccard-verify >= Lsh.Threshold against ANY earlier document
     * (band-key join into the registry, exact verify against the stored
     * hash arrays) or against an earlier-id document in the same batch
     * (the shared minhashLshPairs stages over one shingle scan), writes
@@ -270,82 +247,41 @@ object StreamingPipelines {
     * batches with BOTH tables committed (_SUCCESS), so a half-written
     * attempt can neither self-match nor go half-registered.
     *
-    * Band buckets that are ubiquitous in the REGISTRY (> maxBucket prior
-    * docs — boilerplate) are excluded from cross-batch matching,
-    * mirroring minhashLshPairs' in-batch cap; equivalence is exact while
-    * buckets stay under the cap (the spec's regime) and both formulations
-    * degrade the same way past it.
+    * The MinHash settings are batch curation's (Dedup.Lsh). Band buckets
+    * that are ubiquitous in the REGISTRY (Registry.minhashProbe's cap)
+    * are excluded from cross-batch matching, mirroring minhashLshPairs'
+    * in-batch cap; equivalence is exact while buckets stay under the cap
+    * (the spec's regime) and both formulations degrade the same way past
+    * it.
     *
     * At scale: the cross-batch join shuffles on (b, band_key) — the same
     * key minhashLshPairs self-joins on — and the verify ships 4-byte hash
     * arrays only for banded candidates; registry state grows with seen
     * documents' bands (numBands rows/doc), not with pairs. */
   def minhashDedupSink(docs: DataFrame, registryPath: String, outPath: String,
-      numSigs: Int = 8, rowsPerBand: Int = 2, threshold: Double = 0.8,
-      maxBucket: Int = 1000, compactEvery: Int = 16): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // refuse a registry whose hash arrays predate the sorted-array
-        // contract (fused verify would silently mis-score)
-        Registry.ensureFormat(spark, registryPath, "hashes-sorted-v2")
-        // fold old (bands, hashes) batch dirs into snapshots every
-        // `compactEvery` batches — one joint fold, so a snapshot only ever
-        // holds ids committed in BOTH tables (Registry scaladoc)
-        Registry.maybeCompact(spark, registryPath,
-          Seq(s"$registryPath/bands", s"$registryPath/hashes"),
-          upToExclusive = batchId, every = compactEvery)
-        val dedupMark = graft.operators.Dedup.trackMark(spark)
-        val b = batch.toDF().persist()
-        // one shingle scan feeds in-batch pairs, cross-batch verify, AND
-        // the registry write (persist before any explode/join fan-out)
-        val sh = graft.operators.Dedup.shingleSets(b).persist()
-        val bands = graft.operators.Dedup.bandsFromShingles(sh, numSigs, rowsPerBand).persist()
-        try {
-          val inBatch = graft.operators.Dedup
-            .minhashPairsFromTables(sh, bands, threshold, maxBucket)
-            .select(col("doc_b").as("doc_id")).distinct()
-          val vb = Registry.view(spark, registryPath, s"$registryPath/bands", batchId)
-          val vh = Registry.view(spark, registryPath, s"$registryPath/hashes", batchId)
-          // dirs above the watermark still need the both-tables-committed
-          // intersection; the snapshots are jointly consistent by fold
-          val served = vb.dirIds.intersect(vh.dirIds)
-          val crossLosers = if (vb.snapshotPath.isEmpty && served.isEmpty)
-            b.select(col("doc_id")).limit(0)
-          else {
-            val regBands = spark.read
-              .parquet(vb.pathsFor(served): _*)
-              .select(col("doc_id").as("doc_a"), col("b"), col("band_key")).persist()
-            try {
-              val hotKeys = regBands.groupBy(col("b"), col("band_key"))
-                .agg(count(lit(1)).as("__bs")).filter(col("__bs") > maxBucket)
-                .select(col("b"), col("band_key"))
-              val cand = bands.join(regBands, Seq("b", "band_key"))
-                .join(hotKeys, Seq("b", "band_key"), "left_anti")
-                .select(col("doc_a"), col("doc_id").as("doc_b")).distinct()
-              val regHashes = spark.read
-                .parquet(vh.pathsFor(served): _*)
-                .select(col("doc_id").as("doc_a"), col("hashes").as("h_a"))
-              val losers = graft.operators.Dedup.jaccardVerify(cand, regHashes,
-                  sh.select(col("doc_id").as("doc_b"), col("hashes").as("h_b")), threshold)
-                .select(col("doc_b").as("doc_id")).distinct()
-                .localCheckpoint(true) // materialize before regBands unpersists
-              losers
-            } finally { regBands.unpersist(blocking = false); () }
-          }
-          val kept = b.join(inBatch.union(crossLosers).distinct(),
-            Seq("doc_id"), "left_anti")
-          kept.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          bands.write.mode("overwrite").parquet(s"$registryPath/bands/batch=$batchId")
-          sh.select(col("doc_id"), col("hashes"))
-            .write.mode("overwrite").parquet(s"$registryPath/hashes/batch=$batchId")
-        } finally {
-          bands.unpersist(); sh.unpersist(); b.unpersist()
-          graft.operators.Dedup.releaseSince(spark, dedupMark)
-          ()
-        }
-      }
+      compactEvery: Int = 16): DataStreamWriter[Row] =
+    // one joint (bands, hashes) fold: a snapshot only ever holds ids
+    // committed in BOTH tables (Registry scaladoc)
+    Registry.sink(docs, compactEvery, Registry.Group(registryPath,
+        Seq(s"$registryPath/bands", s"$registryPath/hashes"))) { (batch, batchId) =>
+      // refuse a registry whose hash arrays predate the sorted-array
+      // contract (fused verify would silently mis-score)
+      Registry.ensureFormat(batch.sparkSession, registryPath, "hashes-sorted-v2")
+      val b = Dedup.track(batch.persist())
+      // one shingle scan feeds in-batch pairs, cross-batch verify, AND
+      // the registry write (persist before any explode/join fan-out)
+      val sh = Dedup.track(Dedup.shingleSets(b).persist())
+      val bands = Dedup.track(Dedup.bandsFromShingles(sh).persist())
+      val inBatch = Dedup.minhashPairsFromTables(sh, bands,
+          Dedup.Lsh.Threshold, Dedup.Lsh.MaxBucket)
+        .select(col("doc_b").as("doc_id")).distinct()
+      val crossLosers =
+        Registry.minhashProbe(batch.sparkSession, registryPath, batchId, sh, bands)
+      Seq(
+        outPath -> b.join(inBatch.union(crossLosers).distinct(), Seq("doc_id"), "left_anti"),
+        s"$registryPath/bands" -> bands,
+        s"$registryPath/hashes" -> sh.select(col("doc_id"), col("hashes")))
+    }
 
   /** Incremental transitive dup-clustering for continuous ingestion: the
     * cluster-keeper policy (Dedup.duplicateClusters) maintained across
@@ -373,49 +309,34 @@ object StreamingPipelines {
   def winnowClusterSink(docs: DataFrame, registryPath: String, labelsPath: String,
       k: Int = 3, w: Int = 4, minShared: Int = 2,
       maxBucket: Int = 1000, compactEvery: Int = 16): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // fingerprint registry compacts like winnowDedupSink's; the labels
-        // table is SELF-COMPLETE per batch, so its compaction is simply
-        // dropping superseded snapshots (newest 2 kept for reader grace)
-        Registry.maybeCompact(spark, registryPath, Seq(registryPath),
-          upToExclusive = batchId, every = compactEvery)
-        Registry.pruneKeepNewest(spark, labelsPath, keep = 2)
-        val dedupMark = graft.operators.Dedup.trackMark(spark)
-        val b = batch.toDF().persist()
-        // materialize before exploding — see Dedup.winnowPairs; the same
-        // table feeds the registry write AND in-batch pairs (one scan)
-        val bw = graft.operators.Dedup.winnowTable(b, k, w).persist()
-        val fps = bw.select(col("doc_id"), explode(col("fps")).as("fp")).persist()
-        // failure must still drop caches + close the Dedup scope (see
-        // winnowDedupSink)
-        try {
-          val crossPairs =
-            registryPairs(fps, registryPath, batchId, minShared, maxBucket)
-              .select(col("old_doc").as("doc_a"), col("doc_id").as("doc_b"))
-          val newPairs = graft.operators.Dedup
-            .winnowPairsFromTable(bw, minShared, maxBucket)
-            .select(col("doc_a"), col("doc_b"))
-            .unionByName(crossPairs)
-          // newest COMPLETE snapshot below this batch id (retry-safe: a
-          // half-written previous attempt has no _SUCCESS and own-id dirs
-          // are excluded by the < filter)
-          val prior = completedBatches(spark, labelsPath).filter(_ < batchId)
-            .lastOption.map(id => spark.read.parquet(s"$labelsPath/batch=$id"))
-          val labels = prior match {
-            case Some(old) => graft.operators.Dedup.mergeClusters(old, newPairs)
-            case None      => graft.operators.Dedup.duplicateClusters(newPairs)
-          }
-          labels.write.mode("overwrite").parquet(s"$labelsPath/batch=$batchId")
-          fps.write.mode("overwrite").parquet(s"$registryPath/batch=$batchId")
-        } finally {
-          fps.unpersist(); bw.unpersist(); b.unpersist()
-          graft.operators.Dedup.releaseSince(spark, dedupMark)
-          ()
-        }
+    // the fingerprint registry compacts like winnowDedupSink's
+    Registry.sink(docs, compactEvery, Registry.Group(registryPath)) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // the labels table is SELF-COMPLETE per batch, so its compaction is
+      // simply dropping superseded snapshots (newest 2 kept for reader grace)
+      Registry.pruneKeepNewest(spark, labelsPath, keep = 2)
+      val b = Dedup.track(batch.persist())
+      // materialize before exploding — see Dedup.winnowPairs; the same
+      // table feeds the registry write AND in-batch pairs (one scan)
+      val bw = Dedup.track(Dedup.winnowTable(b, k, w).persist())
+      val fps = Dedup.track(bw.select(col("doc_id"), explode(col("fps")).as("fp")).persist())
+      val crossPairs =
+        registryPairs(fps, registryPath, batchId, minShared, maxBucket)
+          .select(col("old_doc").as("doc_a"), col("doc_id").as("doc_b"))
+      val newPairs = Dedup.winnowPairsFromTable(bw, minShared, maxBucket)
+        .select(col("doc_a"), col("doc_b"))
+        .unionByName(crossPairs)
+      // newest COMPLETE snapshot below this batch id (retry-safe: a
+      // half-written previous attempt has no _SUCCESS and own-id dirs
+      // are excluded by the < filter)
+      val prior = completedBatches(spark, labelsPath).filter(_ < batchId)
+        .lastOption.map(id => spark.read.parquet(s"$labelsPath/batch=$id"))
+      val labels = prior match {
+        case Some(old) => Dedup.mergeClusters(old, newPairs)
+        case None      => Dedup.duplicateClusters(newPairs)
       }
+      Seq(labelsPath -> labels, registryPath -> fps)
+    }
 
   /** The newest COMMITTED cluster-labels snapshot winnowClusterSink has
     * written (each finished snapshot is complete; a crashed write's
@@ -452,47 +373,32 @@ object StreamingPipelines {
     *   sink of the other mode refuses an existing registry LOUDLY. */
   def spanDedupSink(docs: DataFrame, spanPath: String, k: Int = 8,
       compactEvery: Int = 16, cjk: Boolean = false): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        Registry.ensureFormat(spark, spanPath,
-          if (cjk) "cjk-chunks-v1" else "latin-spans-v1")
-        // joint fold of (spans, meta) — currentSpanDedup's read-set stays
-        // bounded at snapshot + ~compactEvery dirs per table
-        Registry.maybeCompact(spark, spanPath,
-          Seq(s"$spanPath/spans", s"$spanPath/meta"),
-          upToExclusive = batchId, every = compactEvery)
-        val b = batch.toDF().persist()
-        try {
-          if (cjk) {
-            // materialize before exploding — Generate re-inlines the
-            // chunk construction chain otherwise (see Dedup.winnowPairs)
-            val ct = graft.operators.Dedup.chunkTableCjk(b, k).persist()
-            try {
-              ct.select(col("doc_id"), explode(col("chunks")).as("c"))
-                .select(col("doc_id"), col("c.span").as("span"),
-                  col("c.cs").as("cs"), col("c.ce").as("ce"))
-                .write.mode("overwrite").parquet(s"$spanPath/spans/batch=$batchId")
-              ct.select(col("doc_id"), col("lt"),
-                  size(col("chunks")).cast("long").as("n_spans"))
-                .write.mode("overwrite").parquet(s"$spanPath/meta/batch=$batchId")
-            } finally { ct.unpersist(); () }
-          } else {
-            val st = graft.operators.Dedup.spanTable(b, k).persist()
-            try {
-              st.select(col("doc_id"), explode(col("spans")).as("s"))
-                .select(col("doc_id"), col("s.pos").as("pos"), col("s.span").as("span"))
-                .write.mode("overwrite").parquet(s"$spanPath/spans/batch=$batchId")
-              st.select(col("doc_id"), size(col("spans")).cast("long").as("n_spans"))
-                .write.mode("overwrite").parquet(s"$spanPath/meta/batch=$batchId")
-            } finally { st.unpersist(); () }
-          }
-        } finally {
-          b.unpersist()
-          ()
-        }
+    // joint fold of (spans, meta) — currentSpanDedup's read-set stays
+    // bounded at snapshot + ~compactEvery dirs per table
+    Registry.sink(docs, compactEvery, Registry.Group(spanPath,
+        Seq(s"$spanPath/spans", s"$spanPath/meta"))) { (batch, _) =>
+      Registry.ensureFormat(batch.sparkSession, spanPath,
+        if (cjk) "cjk-chunks-v1" else "latin-spans-v1")
+      // spans before meta: currentSpanDedup serves only ids committed in both
+      if (cjk) {
+        // materialize before exploding — Generate re-inlines the
+        // chunk construction chain otherwise (see Dedup.winnowPairs)
+        val ct = Dedup.track(Dedup.chunkTableCjk(batch, k).persist())
+        Seq(
+          s"$spanPath/spans" -> ct.select(col("doc_id"), explode(col("chunks")).as("c"))
+            .select(col("doc_id"), col("c.span").as("span"),
+              col("c.cs").as("cs"), col("c.ce").as("ce")),
+          s"$spanPath/meta" -> ct.select(col("doc_id"), col("lt"),
+            size(col("chunks")).cast("long").as("n_spans")))
+      } else {
+        val st = Dedup.track(Dedup.spanTable(batch, k).persist())
+        Seq(
+          s"$spanPath/spans" -> st.select(col("doc_id"), explode(col("spans")).as("s"))
+            .select(col("doc_id"), col("s.pos").as("pos"), col("s.span").as("span")),
+          s"$spanPath/meta" -> st.select(col("doc_id"),
+            size(col("spans")).cast("long").as("n_spans")))
       }
+    }
 
   /** The retroactive span-dedup snapshot over everything spanDedupSink has
     * registered: same output contract as Dedup.dedupSpans over the
@@ -566,22 +472,17 @@ object StreamingPipelines {
     val spark = benchmark.sparkSession
     val bf = graft.operators.TextAnalysis.benchmarkBloom(benchmark, n, fpp)
     val bfB = bf.map(spark.sparkContext.broadcast(_))
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val b = batch.toDF().persist()
-        try {
-          val contaminated = bfB match {
-            case Some(broadcastFilter) =>
-              graft.operators.TextAnalysis
-                .bloomScoreBroadcast(b, broadcastFilter, n)
-                .filter(col("n_bf_grams") > 0).select(col("doc_id"))
-            case None => b.select(col("doc_id")).limit(0) // empty benchmark
-          }
-          b.join(contaminated, Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        } finally { b.unpersist(); () }
+    Registry.sink(docs) { (batch, _) =>
+      val b = Dedup.track(batch.persist())
+      val contaminated = bfB match {
+        case Some(broadcastFilter) =>
+          graft.operators.TextAnalysis
+            .bloomScoreBroadcast(b, broadcastFilter, n)
+            .filter(col("n_bf_grams") > 0).select(col("doc_id"))
+        case None => b.select(col("doc_id")).limit(0) // empty benchmark
       }
+      Seq(outPath -> b.join(contaminated, Seq("doc_id"), "left_anti"))
+    }
   }
 
   /** Streaming SURGICAL span decontamination: the batch
@@ -595,23 +496,16 @@ object StreamingPipelines {
     * operator, cjk mode included. Each batch's excised corpus lands
     * idempotently in `outPath/batch=<id>` (overwrite — the at-least-once
     * foreachBatch retry contract of the other incremental sinks here);
-    * the operator's registry-tracked persists are released per batch
-    * (trackMark/releaseSince — a continuous stream must not accumulate
+    * the operator's registry-tracked persists are released per batch by
+    * the Registry.sink scope (a continuous stream must not accumulate
     * InMemoryRelations). */
   def spanExcisionSink(docs: DataFrame, benchmark: DataFrame, outPath: String,
       n: Int = 4, cjk: Boolean = false,
       preserveStructure: Boolean = false): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val mark = graft.operators.Dedup.trackMark(spark)
-        try
-          graft.operators.TextAnalysis
-            .decontaminateSpans(batch.toDF(), benchmark, n, cjk, preserveStructure)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        finally { graft.operators.Dedup.releaseSince(spark, mark); () }
-      }
+    Registry.sink(docs) { (batch, _) =>
+      Seq(outPath -> graft.operators.TextAnalysis
+        .decontaminateSpans(batch, benchmark, n, cjk, preserveStructure))
+    }
 
   /** Incremental IMAGE near-dup removal for continuous ingestion — the
     * streaming twin of Images.nearDupPairs (drop-doc_b), completing
@@ -674,71 +568,33 @@ object StreamingPipelines {
   def mediaCurateSink(media: DataFrame, registryPath: String, outPath: String,
       g: graft.pipeline.MediaCurate.Gates,
       compactEvery: Int = 16): DataStreamWriter[Row] =
-    media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        Registry.maybeCompact(spark, registryPath, Seq(registryPath),
-          upToExclusive = batchId, every = compactEvery)
-        val dedupMark = graft.operators.Dedup.trackMark(spark)
-        // the decode pass is the batch's only consumer and its output is
-        // persisted, so the raw binaries are not
-        val prof = g.profile(spark, batch.toDF()).persist()
-        try {
-          val (labeled, surv) =
-            gatedLabelForBatch(spark, prof, registryPath, batchId, g)
-          try {
-            labeled.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-            surv.write.mode("overwrite").parquet(s"$registryPath/batch=$batchId")
-          } finally { surv.unpersist(); () }
-        } finally {
-          prof.unpersist()
-          graft.operators.Dedup.releaseSince(spark, dedupMark)
-          ()
-        }
-      }
+    Registry.sink(media, compactEvery, Registry.Group(registryPath)) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // the decode pass is the batch's only consumer and its output is
+      // persisted, so the raw binaries are not
+      val prof = Dedup.track(g.profile(spark, batch).persist())
+      val (labeled, surv) = gatedLabelForBatch(spark, prof, registryPath, batchId, g)
+      Seq(outPath -> labeled, registryPath -> surv)
+    }
 
   /** One modality's gated labeled frame for one micro-batch — the body
     * shared by [[mediaCurateSink]] and the cross-modal
     * [[mediaCurate3Sink]]: near-dup among gate SURVIVORS against this
     * modality's survivor-only registry plus the in-batch banded pair
     * join, labeled by MediaCurate.label. `prof` must be persisted by
-    * the caller; the returned survivor frame is persisted HERE and the
-    * caller unpersists it after writing — on an internal throw the
-    * persist is released before rethrowing, so a failed call never
-    * leaks cache. Returns
-    * (labeled(doc_id, drop_reason), survivors-to-register). */
+    * the caller; the survivor frame is persisted in the caller's Dedup
+    * scope. Returns (labeled(doc_id, drop_reason), survivors-to-register). */
   private def gatedLabelForBatch(spark: SparkSession, prof: DataFrame,
       registryPath: String, batchId: Long,
       g: graft.pipeline.MediaCurate.Gates): (DataFrame, DataFrame) = {
-    val surv = prof.filter(g.survives)
-      .select(col("doc_id"), col(g.hashCol)).persist()
-    // a throw below (e.g. the registry parquet read) must not leak the
-    // persist we just took — release it before rethrowing; on success
-    // the caller owns the release after writing
-    try {
-      val inBatch = graft.operators.Fingerprints
-        .nearDupPairs(surv, g.hashCol, g.maxHamming)
-        .select(col("doc_b").as("doc_id")).distinct()
-      val v = Registry.view(spark, registryPath, registryPath,
-        excludeId = batchId)
-      val vsRegistry =
-        if (v.isEmpty) surv.select(col("doc_id")).limit(0)
-        else {
-          val reg = spark.read.parquet(v.paths: _*)
-            .select(col("doc_id"), col(g.hashCol))
-          graft.operators.Fingerprints
-            .hammingPairsAcross(surv, reg, g.hashCol, g.maxHamming)
-            .select(col("doc_id")).distinct()
-        }
-      val dupped = inBatch.union(vsRegistry).distinct()
-        .withColumn("__dup", lit(1))
-      val labeled = graft.pipeline.MediaCurate.label(
-        prof.join(dupped, Seq("doc_id"), "left"), g, col("__dup").isNotNull)
-      (labeled, surv)
-    } catch {
-      case t: Throwable => surv.unpersist(); throw t
-    }
+    val surv = Dedup.track(prof.filter(g.survives)
+      .select(col("doc_id"), col(g.hashCol)).persist())
+    val dupped = Registry.hammingProbe(spark, registryPath, batchId,
+        surv, g.hashCol, g.maxHamming)
+      .withColumn("__dup", lit(1))
+    val labeled = graft.pipeline.MediaCurate.label(
+      prof.join(dupped, Seq("doc_id"), "left"), g, col("__dup").isNotNull)
+    (labeled, surv)
   }
 
   /** Incremental THREE-modality curation — the streaming twin of
@@ -757,42 +613,19 @@ object StreamingPipelines {
     import graft.pipeline.MediaCurate.{AudioGates, ImageGates, VideoGates}
     val arms = Seq(ImageGates(), AudioGates(), VideoGates())
       .map(g => g -> s"$registryRoot/${g.modality}")
-    media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        for ((_, r) <- arms)
-          Registry.maybeCompact(spark, r, Seq(r),
-            upToExclusive = batchId, every = compactEvery)
-        val dedupMark = graft.operators.Dedup.trackMark(spark)
-        // three decode passes read the batch, so it is persisted
-        val b = batch.toDF().persist()
-        val profs = arms.map { case (g, _) =>
-          g.profile(spark, b.select(col("doc_id"), col(g.input))).persist()
-        }
-        // each modality's survivor frame is released as soon as it is
-        // acquired-tracked, so a throw in a LATER modality's gated call
-        // cannot leak an earlier modality's persist (gatedLabelForBatch
-        // releases its own persist on internal failure)
-        val acquiredSurvs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        try {
-          val labeled = arms.zip(profs).map { case ((g, r), prof) =>
-            val (lbl, surv) = gatedLabelForBatch(spark, prof, r, batchId, g)
-            acquiredSurvs += surv
-            g.modality -> lbl
-          }
-          graft.pipeline.MediaCurate.verdict(labeled)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          for (((_, r), surv) <- arms.zip(acquiredSurvs))
-            surv.write.mode("overwrite").parquet(s"$r/batch=$batchId")
-        } finally {
-          acquiredSurvs.foreach(_.unpersist())
-          profs.foreach(_.unpersist())
-          b.unpersist()
-          graft.operators.Dedup.releaseSince(spark, dedupMark)
-          ()
-        }
+    Registry.sink(media, compactEvery,
+        arms.map { case (_, r) => Registry.Group(r) }: _*) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // three decode passes read the batch, so it is persisted
+      val b = Dedup.track(batch.persist())
+      val gated = arms.map { case (g, r) =>
+        val prof = Dedup.track(
+          g.profile(spark, b.select(col("doc_id"), col(g.input))).persist())
+        val (lbl, surv) = gatedLabelForBatch(spark, prof, r, batchId, g)
+        (g.modality -> lbl, r -> surv)
       }
+      (outPath -> graft.pipeline.MediaCurate.verdict(gated.map(_._1))) +: gated.map(_._2)
+    }
   }
 
   /** Incremental VIDEO near-dup removal — keyframe perceptual hashes
@@ -834,25 +667,13 @@ object StreamingPipelines {
       outPath: String, hashCol: String, maxHamming: Int,
       stats: (SparkSession, DataFrame) => DataFrame): DataStreamWriter[Row] = {
     graft.operators.Fingerprints.requireLossless(maxHamming)
-    media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // decontaminate persists its decoded input (the batch's only
-        // consumer) and tracks it under this stream's session, so the
-        // scope must release it or every micro-batch leaks one frame
-        val dedupMark = graft.operators.Dedup.trackMark(spark)
-        try {
-          val hashes = stats(spark, batch.toDF())
-            .select(col("doc_id"), col(hashCol))
-          graft.operators.Fingerprints
-            .decontaminate(hashes, evalHashes, hashCol, maxHamming)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        } finally {
-          graft.operators.Dedup.releaseSince(spark, dedupMark)
-          ()
-        }
-      }
+    // decontaminate persists its decoded input (the batch's only
+    // consumer) in the sink's scope, released every micro-batch
+    Registry.sink(media) { (batch, _) =>
+      val hashes = stats(batch.sparkSession, batch).select(col("doc_id"), col(hashCol))
+      Seq(outPath -> graft.operators.Fingerprints
+        .decontaminate(hashes, evalHashes, hashCol, maxHamming))
+    }
   }
 
   /** The shared fingerprint-registry dedup sink behind the image and
@@ -867,45 +688,15 @@ object StreamingPipelines {
       outPath: String, maxHamming: Int, compactEvery: Int, hashCol: String,
       stats: (SparkSession, DataFrame) => DataFrame): DataStreamWriter[Row] = {
     graft.operators.Fingerprints.requireLossless(maxHamming)
-    media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        Registry.maybeCompact(spark, registryPath, Seq(registryPath),
-          upToExclusive = batchId, every = compactEvery)
-        val dedupMark = graft.operators.Dedup.trackMark(spark)
-        val b = batch.toDF().persist()
-        // decode once per media row: the same stats table feeds the
-        // registry write, the in-batch pair join, and the registry probe
-        val fps = stats(spark, b)
-          .select(col("doc_id"), col(hashCol)).persist()
-        try {
-          val inBatch = graft.operators.Fingerprints
-            .nearDupPairs(fps, hashCol, maxHamming)
-            .select(col("doc_b").as("doc_id")).distinct()
-          val v = Registry.view(spark, registryPath, registryPath,
-            excludeId = batchId)
-          val vsRegistry =
-            if (v.isEmpty) fps.select(col("doc_id")).limit(0)
-            else {
-              val reg = spark.read.parquet(v.paths: _*)
-                .select(col("doc_id"), col(hashCol))
-              graft.operators.Fingerprints
-                .hammingPairsAcross(fps, reg, hashCol, maxHamming)
-                .select(col("doc_id")).distinct()
-            }
-          val dropped = inBatch.union(vsRegistry).distinct()
-          b.join(dropped, Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          fps.write.mode("overwrite").parquet(s"$registryPath/batch=$batchId")
-        } finally {
-          fps.unpersist(); b.unpersist()
-          // the pair join's internal tracked persist (Fingerprints.
-          // nearDupPairs) must not accumulate across micro-batches
-          graft.operators.Dedup.releaseSince(spark, dedupMark)
-          ()
-        }
-      }
+    Registry.sink(media, compactEvery, Registry.Group(registryPath)) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val b = Dedup.track(batch.persist())
+      // decode once per media row: the same stats table feeds the
+      // registry write, the in-batch pair join, and the registry probe
+      val fps = Dedup.track(stats(spark, b).select(col("doc_id"), col(hashCol)).persist())
+      val dropped = Registry.hammingProbe(spark, registryPath, batchId, fps, hashCol, maxHamming)
+      Seq(outPath -> b.join(dropped, Seq("doc_id"), "left_anti"), registryPath -> fps)
+    }
   }
 
   /** K2 analog: dynamic per-record routing — one pass, fanned out by the
@@ -922,10 +713,7 @@ object StreamingPipelines {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.persist()
-        try
-          batch.write.mode("append").partitionBy("sink_table").parquet(basePath)
-        finally { batch.unpersist(); () }
+        batch.write.mode("append").partitionBy("sink_table").parquet(basePath)
       }
 
   /** Incremental count-min sketch: each micro-batch writes ITS OWN
@@ -944,74 +732,37 @@ object StreamingPipelines {
     * garbage — the BucketedUpsert layout-marker rule). */
   def sketchSink(obs: DataFrame, keyCol: String, registryPath: String,
       depth: Int = 4, width: Int = 4096,
-      compactEvery: Int = 16): DataStreamWriter[Row] =
-    obs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        requireShape(spark, registryPath, depth, width, createIfAbsent = true)
-        val sumFold = (df: DataFrame) =>
-          df.groupBy(col("r"), col("bucket")).agg(sum(col("c")).as("c"))
-        Registry.maybeCompact(spark, registryPath,
-          Seq(s"$registryPath/counters"),
-          upToExclusive = batchId, every = compactEvery,
-          fold = Map(s"$registryPath/counters" -> sumFold))
-        val b = batch.toDF().persist()
-        try
-          graft.operators.Sketches
-            .countMinCounters(b, col(keyCol), depth, width)
-            .write.mode("overwrite")
-            .parquet(s"$registryPath/counters/batch=$batchId")
-        finally { b.unpersist(blocking = false); () }
-      }
+      compactEvery: Int = 16): DataStreamWriter[Row] = {
+    val counters = s"$registryPath/counters"
+    Registry.sink(obs, compactEvery,
+        Registry.Group(registryPath, Seq(counters), Map(counters -> (sumCounters _)))) {
+      (batch, _) =>
+        Registry.marker(batch.sparkSession, registryPath, "shape", "sketch shape",
+          want = Some(s"${depth}x$width"), createIfAbsent = true)
+        Seq(counters -> graft.operators.Sketches.countMinCounters(batch, col(keyCol), depth, width))
+    }
+  }
+
+  private def sumCounters(df: DataFrame): DataFrame =
+    df.groupBy(col("r"), col("bucket")).agg(sum(col("c")).as("c"))
 
   /** The running counter table (element-wise sum of snapshot + committed
     * batch dirs) — one row per touched (r, bucket). */
   def currentSketch(spark: SparkSession, registryPath: String): DataFrame = {
-    val v = Registry.view(spark, registryPath, s"$registryPath/counters")
-    if (v.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
-        StructField("r", IntegerType), StructField("bucket", LongType),
-        StructField("c", LongType))))
-    } else spark.read.parquet(v.paths: _*)
-      .groupBy(col("r"), col("bucket")).agg(sum(col("c")).as("c"))
+    import org.apache.spark.sql.types._
+    sumCounters(Registry.read(spark, registryPath, s"$registryPath/counters", StructType(Seq(
+      StructField("r", IntegerType), StructField("bucket", LongType),
+      StructField("c", LongType)))))
   }
 
   /** Point estimates against the running sketch for the caller's
     * candidate keys (shape read from the pinned marker). */
   def currentEstimate(spark: SparkSession, registryPath: String,
       keys: DataFrame, keyCol: String): DataFrame = {
-    val (depth, width) = readShape(spark, registryPath)
+    val Array(depth, width) =
+      Registry.marker(spark, registryPath, "shape", "sketch shape").split("x").map(_.toInt)
     graft.operators.Sketches.countMinEstimate(
       keys, col(keyCol), currentSketch(spark, registryPath), depth, width)
-  }
-
-  private def shapePath(registryPath: String, depth: Int, width: Int) =
-    new org.apache.hadoop.fs.Path(registryPath, s"_shape=${depth}x$width")
-
-  private def requireShape(spark: SparkSession, registryPath: String,
-      depth: Int, width: Int, createIfAbsent: Boolean): Unit = {
-    val base = new org.apache.hadoop.fs.Path(registryPath)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val existing =
-      if (fs.exists(base))
-        fs.listStatus(base).map(_.getPath.getName)
-          .filter(_.startsWith("_shape=")).toSeq
-      else Seq.empty
-    existing match {
-      case Seq() if createIfAbsent =>
-        fs.mkdirs(base)
-        fs.create(shapePath(registryPath, depth, width), true).close()
-      case Seq() =>
-        throw new IllegalStateException(s"no sketch shape marker under $registryPath")
-      case Seq(one) =>
-        require(one == s"_shape=${depth}x$width",
-          s"sketch shape mismatch under $registryPath: registry is $one, caller wants ${depth}x$width")
-      case many =>
-        throw new IllegalStateException(
-          s"conflicting sketch shape markers under $registryPath: ${many.mkString(", ")}")
-    }
   }
 
   /** Continuous corpus onboarding: every micro-batch of incoming docs is
@@ -1029,42 +780,23 @@ object StreamingPipelines {
     * CurateStream's job); this sink answers exactly one question per
     * doc: "is it already in the curated corpus?" */
   def onboardingSink(docs: DataFrame, reference: DataFrame, outPath: String,
-      numSigs: Int = 8, rowsPerBand: Int = 2, threshold: Double = 0.8,
-      maxBucket: Int = 1000, compactEvery: Int = 16): DataStreamWriter[Row] = {
-    val ref = graft.operators.Dedup.prepareReference(
-      reference, numSigs, rowsPerBand, threshold, maxBucket)
+      compactEvery: Int = 16): DataStreamWriter[Row] = {
+    val ref = Dedup.prepareReference(reference)
     // materialize the index now: the first micro-batch should not absorb
     // the reference scans, and the persisted frames are shared by all
     ref.fpRef.count(); ref.bandsR.count(); ref.shR.count()
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        Registry.maybeCompact(spark, outPath, Seq(outPath),
-          upToExclusive = batchId, every = compactEvery)
-        val mark = graft.operators.Dedup.trackMark(spark)
-        val b = batch.toDF().persist()
-        try
-          graft.operators.Dedup.dedupAgainstIndex(b, ref)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        finally {
-          b.unpersist(blocking = false)
-          // release THIS batch's per-doc caches; the reference index
-          // frames belong to the sink's (earlier) scope and survive
-          graft.operators.Dedup.releaseSince(spark, mark)
-          ()
-        }
-      }
+    // each batch's scope releases only THIS batch's per-doc caches; the
+    // reference index frames belong to the caller's (earlier) scope
+    Registry.sink(docs, compactEvery, Registry.Group(outPath)) { (batch, _) =>
+      Seq(outPath -> Dedup.dedupAgainstIndex(Dedup.track(batch.persist()), ref))
+    }
   }
 
   /** Every onboarding label so far (committed batches + snapshot). */
   def onboardedView(spark: SparkSession, outPath: String): DataFrame = {
-    val v = Registry.view(spark, outPath, outPath)
-    if (v.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+    import org.apache.spark.sql.types._
+    Registry.read(spark, outPath, outPath, StructType(Seq(
         StructField("doc_id", LongType), StructField("drop_reason", StringType))))
-    } else spark.read.parquet(v.paths: _*)
       .select(col("doc_id"), col("drop_reason"))
   }
 
@@ -1082,31 +814,23 @@ object StreamingPipelines {
     * compacts to one row per live (key, bucket). */
   def countSink(events: DataFrame, registryPath: String,
       keyCol: String = "event_type", tsCol: String = "ts",
-      granularity: String = "day", compactEvery: Int = 16): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        Registry.maybeCompact(spark, registryPath, Seq(s"$registryPath/counts"),
-          upToExclusive = batchId, every = compactEvery,
-          fold = Map(s"$registryPath/counts" -> (sumCounts _)))
-        graft.operators.Anomaly
-          .bucketCounts(batch.toDF(), col(keyCol), col(tsCol), granularity)
-          .write.mode("overwrite").parquet(s"$registryPath/counts/batch=$batchId")
-        ()
-      }
+      granularity: String = "day", compactEvery: Int = 16): DataStreamWriter[Row] = {
+    val counts = s"$registryPath/counts"
+    Registry.sink(events, compactEvery,
+        Registry.Group(registryPath, Seq(counts), Map(counts -> (sumCounts _)))) { (batch, _) =>
+      Seq(counts -> graft.operators.Anomaly
+        .bucketCounts(batch, col(keyCol), col(tsCol), granularity))
+    }
+  }
 
   /** The live count table: snapshot + committed dirs, summed per
     * (key, bucket) — read-time and fold-time use the same function, so
     * they cannot drift. */
   def currentCounts(spark: SparkSession, registryPath: String): DataFrame = {
-    val v = Registry.view(spark, registryPath, s"$registryPath/counts")
-    if (v.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
-        StructField("key", StringType), StructField("bucket", TimestampType),
-        StructField("c", LongType))))
-    } else sumCounts(spark.read.parquet(v.paths: _*))
+    import org.apache.spark.sql.types._
+    sumCounts(Registry.read(spark, registryPath, s"$registryPath/counts", StructType(Seq(
+      StructField("key", StringType), StructField("bucket", TimestampType),
+      StructField("c", LongType)))))
   }
 
   /** The live alarm: [[graft.operators.Anomaly.flagFromCounts]] over the
@@ -1152,37 +876,28 @@ object StreamingPipelines {
     val model = collectModel(centroids)
     require(model.nonEmpty, "ivfIndexSink needs a non-empty centroid set")
     val hash = modelHash(model)
-    vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+    val postings = s"$registryPath/postings"
+    Registry.sink(vectors, compactEvery,
+        Registry.Group(registryPath, Seq(postings), Map(postings -> (latestPostings _)))) {
+      (batch, batchId) =>
         val spark = batch.sparkSession
         requireModel(spark, registryPath, hash, createIfAbsent = true)
-        Registry.maybeCompact(spark, registryPath, Seq(s"$registryPath/postings"),
-          upToExclusive = batchId, every = compactEvery,
-          fold = Map(s"$registryPath/postings" -> (latestPostings _)))
-        val b = batch.toDF().persist()
-        try
-          graft.operators.Ivf.index(b, modelFrame(spark, model))
-            .filter(col("cid").isNotNull)
-            .select(col("vec_id"), col("e"), col("cid").cast("long").as("cid"),
-              lit(batchId).as("__b"))
-            .write.mode("overwrite").parquet(s"$registryPath/postings/batch=$batchId")
-        finally { b.unpersist(blocking = false); () }
-      }
+        Seq(postings -> graft.operators.Ivf.index(batch, modelFrame(spark, model))
+          .filter(col("cid").isNotNull)
+          .select(col("vec_id"), col("e"), col("cid").cast("long").as("cid"),
+            lit(batchId).as("__b")))
+    }
   }
 
   /** The live index: snapshot + committed batch dirs, collapsed to the
     * newest posting per vec_id — the same fold compaction applies, so
     * read-time and fold-time dedup cannot drift. */
   def currentIvfIndex(spark: SparkSession, registryPath: String): DataFrame = {
-    val v = Registry.view(spark, registryPath, s"$registryPath/postings")
-    if (v.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+    import org.apache.spark.sql.types._
+    latestPostings(Registry.read(spark, registryPath, s"$registryPath/postings",
+      StructType(Seq(
         StructField("vec_id", LongType), StructField("e", ArrayType(DoubleType)),
-        StructField("cid", LongType), StructField("__b", LongType))))
-        .drop("__b")
-    } else latestPostings(spark.read.parquet(v.paths: _*)).drop("__b")
+        StructField("cid", LongType), StructField("__b", LongType))))).drop("__b")
   }
 
   /** Serve IVF top-k from the live index. The caller's centroids must be
@@ -1227,41 +942,30 @@ object StreamingPipelines {
     val cbModel = collectCodebookModel(codebook)
     require(cbModel.nonEmpty, "pqIndexSink needs a non-empty codebook")
     val hash = pqModelHash(cModel, cbModel)
-    vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+    val codes = s"$registryPath/codes"
+    Registry.sink(vectors, compactEvery,
+        Registry.Group(registryPath, Seq(codes), Map(codes -> (latestCodes _)))) {
+      (batch, batchId) =>
         val spark = batch.sparkSession
         requireModel(spark, registryPath, hash, createIfAbsent = true)
-        Registry.maybeCompact(spark, registryPath, Seq(s"$registryPath/codes"),
-          upToExclusive = batchId, every = compactEvery,
-          fold = Map(s"$registryPath/codes" -> (latestCodes _)))
-        val b = batch.toDF().persist()
-        try {
-          val idx = graft.operators.Ivf.index(b, modelFrame(spark, cModel))
-            .filter(col("cid").isNotNull).persist()
-          try
-            graft.operators.Pq
-              .encodeResidual(idx, modelFrame(spark, cModel),
-                codebookFrame(spark, cbModel), dim, m)
-              .join(idx.select(col("vec_id"), col("cid").cast("long").as("cid")),
-                "vec_id")
-              .select(col("vec_id"), col("cid"), col("codes"), lit(batchId).as("__b"))
-              .write.mode("overwrite").parquet(s"$registryPath/codes/batch=$batchId")
-          finally { idx.unpersist(blocking = false); () }
-        } finally { b.unpersist(blocking = false); () }
-      }
+        val idx = Dedup.track(graft.operators.Ivf.index(batch, modelFrame(spark, cModel))
+          .filter(col("cid").isNotNull).persist())
+        Seq(codes -> graft.operators.Pq
+          .encodeResidual(idx, modelFrame(spark, cModel),
+            codebookFrame(spark, cbModel), dim, m)
+          .join(idx.select(col("vec_id"), col("cid").cast("long").as("cid")), "vec_id")
+          .select(col("vec_id"), col("cid"), col("codes"), lit(batchId).as("__b")))
+    }
   }
 
   /** The live compressed index: (vec_id, cid, codes), newest per vec_id. */
   def currentPqIndex(spark: SparkSession, registryPath: String): DataFrame = {
-    val v = Registry.view(spark, registryPath, s"$registryPath/codes")
-    if (v.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+    import org.apache.spark.sql.types._
+    latestCodes(Registry.read(spark, registryPath, s"$registryPath/codes",
+      StructType(Seq(
         StructField("vec_id", LongType), StructField("cid", LongType),
-        StructField("codes", ArrayType(IntegerType)), StructField("__b", LongType))))
-        .drop("__b")
-    } else latestCodes(spark.read.parquet(v.paths: _*)).drop("__b")
+        StructField("codes", ArrayType(IntegerType)), StructField("__b", LongType)))))
+      .drop("__b")
   }
 
   /** Serve residual-IVF-PQ top-k from the live compressed index. The
@@ -1326,48 +1030,10 @@ object StreamingPipelines {
     model.toDF("cid", "ce")
   }
 
+  /** The `_model=<hash>` marker guard of the ANN index registries. */
   private def requireModel(spark: SparkSession, registryPath: String,
       hash: String, createIfAbsent: Boolean): Unit = {
-    val base = new org.apache.hadoop.fs.Path(registryPath)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val existing =
-      if (fs.exists(base))
-        fs.listStatus(base).map(_.getPath.getName)
-          .filter(_.startsWith("_model=")).toSeq
-      else Seq.empty
-    existing match {
-      case Seq() if createIfAbsent =>
-        fs.mkdirs(base)
-        fs.create(new org.apache.hadoop.fs.Path(base, s"_model=$hash"), true).close()
-      case Seq() =>
-        throw new IllegalStateException(s"no IVF model marker under $registryPath")
-      case Seq(one) =>
-        require(one == s"_model=$hash",
-          s"IVF model mismatch under $registryPath: registry was built with " +
-            s"$one, caller holds _model=$hash — rebuild the index for a new model")
-      case many =>
-        throw new IllegalStateException(
-          s"conflicting IVF model markers under $registryPath: ${many.mkString(", ")}")
-    }
-  }
-
-  private def readShape(spark: SparkSession, registryPath: String): (Int, Int) = {
-    val base = new org.apache.hadoop.fs.Path(registryPath)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val markers =
-      if (fs.exists(base))
-        fs.listStatus(base).map(_.getPath.getName)
-          .filter(_.startsWith("_shape=")).toSeq
-      else Seq.empty
-    markers match {
-      case Seq(one) =>
-        val Array(d, w) = one.stripPrefix("_shape=").split("x")
-        (d.toInt, w.toInt)
-      case Seq() =>
-        throw new IllegalStateException(s"no sketch shape marker under $registryPath")
-      case many =>
-        throw new IllegalStateException(
-          s"conflicting sketch shape markers under $registryPath: ${many.mkString(", ")}")
-    }
+    Registry.marker(spark, registryPath, "model", "IVF model", Some(hash), createIfAbsent)
+    ()
   }
 }

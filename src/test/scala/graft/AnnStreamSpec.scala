@@ -32,6 +32,7 @@ class AnnStreamSpec extends AnyFunSuite {
     centroids.count()
 
     val stream = MemoryStream[(Long, Seq[Double])]
+    val leaks = SparkTestSession.leakCheck()
     val q = StreamingPipelines.ivfIndexSink(
         stream.toDF().toDF("vec_id", "embedding"), centroids, regPath,
         compactEvery = 2)
@@ -40,6 +41,7 @@ class AnnStreamSpec extends AnyFunSuite {
       stream.addData(b); q.processAllAvailable()
     }
     q.stop()
+    leaks.assertNoLeak("ivfIndexSink")
 
     // live index == one-shot batch index over the LATEST version of each vec
     val got = StreamingPipelines.currentIvfIndex(spark, regPath)
@@ -112,6 +114,7 @@ class AnnStreamSpec extends AnyFunSuite {
       .persist(); codebook.count()
 
     val stream = MemoryStream[(Long, Seq[Double])]
+    val leaks = SparkTestSession.leakCheck()
     val q = StreamingPipelines.pqIndexSink(
         stream.toDF().toDF("vec_id", "embedding"), centroids, codebook, regPath,
         dim = 4, m = 2, compactEvery = 2)
@@ -120,6 +123,7 @@ class AnnStreamSpec extends AnyFunSuite {
       stream.addData(b); q.processAllAvailable()
     }
     q.stop()
+    leaks.assertNoLeak("pqIndexSink")
 
     // live compressed index == one-shot batch encode over the LATEST vecs
     val got = StreamingPipelines.currentPqIndex(spark, regPath)

@@ -56,6 +56,15 @@ class AnomalySpec extends AnyFunSuite {
       (1 to 10).map(i => ("b", f"2024-01-$i%02d", 7))
     val rows = shape.flatMap { case (k, d, n) => Seq.fill(n)((k, s"$d 12:00:00")) }
     val stream = MemoryStream[(String, String)]
+    val leaks = SparkTestSession.leakCheck()
+    // (job group, job description) of every job started while it runs
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(ev: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(ev.properties).foreach(p => jobs.add(
+          (p.getProperty("spark.jobGroup.id"), p.getProperty("spark.job.description"))))
+    }
+    spark.sparkContext.addSparkListener(listener)
     val q = graft.streaming.StreamingPipelines.countSink(
         stream.toDF().toDF("event_type", "t")
           .select(col("event_type"), to_timestamp(col("t")).as("ts")),
@@ -68,6 +77,21 @@ class AnomalySpec extends AnyFunSuite {
       stream.addData(h); q.processAllAvailable()
     }
     q.stop()
+    leaks.assertNoLeak("countSink")
+    SparkTestSession.drainListeners()
+    spark.sparkContext.removeSparkListener(listener)
+    // jobs per micro-batch: the stream runs every batch in the query's
+    // runId job group, with "batch = <id>" in the job description. A plain
+    // batch runs 2 jobs; batches 2, 4 and 6 also fold the two dirs below
+    // them (compactEvery = 2). The counts are pinned: the sink's scaffold
+    // must add no job to the hot path.
+    import scala.jdk.CollectionConverters._
+    val batchOf = "batch = (\\d+)".r
+    val perBatch = jobs.asScala.toSeq
+      .collect { case (g, d) if g == q.runId.toString && d != null => d }
+      .flatMap(d => batchOf.findFirstMatchIn(d).map(_.group(1).toInt))
+      .groupBy(identity).toSeq.sortBy(_._1).map(_._2.size)
+    assert(perBatch === Seq(2, 2, 5, 2, 5, 2, 5, 2))
     def keyed(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getTimestamp(1).toString) ->
         (r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap

@@ -32,13 +32,16 @@ class OnboardingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
 
     val stream = MemoryStream[(Long, String)]
-    val q = StreamingPipelines.onboardingSink(
-        stream.toDF().toDF("doc_id", "text"), reference, outPath, compactEvery = 2)
-      .start()
+    // the reference index is cached once, when the sink is built
+    val sink = StreamingPipelines.onboardingSink(
+      stream.toDF().toDF("doc_id", "text"), reference, outPath, compactEvery = 2)
+    val leaks = SparkTestSession.leakCheck()
+    val q = sink.start()
     incoming.grouped(math.max(1, incoming.size / 5)).foreach { h =>
       stream.addData(h); q.processAllAvailable()
     }
     q.stop()
+    leaks.assertNoLeak("onboardingSink")
 
     val got = StreamingPipelines.onboardedView(spark, outPath)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Dedup
 import graft.streaming.Registry
 
 /** Crash-window unit tests for the registry compaction protocol — the
@@ -153,5 +154,44 @@ class RegistrySpec extends AnyFunSuite {
     val names = new java.io.File(base).listFiles().map(_.getName)
       .filter(_.startsWith("batch=")).toSet
     assert(names === Set("batch=3", "batch=4"), names)
+  }
+
+  test("sink scaffold: a failed batch leaves no cached frame and no open Dedup scope") {
+    val base = freshBase("sink_fail")
+    val outer = Dedup.trackMark(spark)
+    val leaks = SparkTestSession.leakCheck()
+    val e = intercept[IllegalStateException] {
+      Registry.runBatch(spark.range(5).toDF("doc_id"), 0L, compactEvery = 1,
+          Seq(Registry.Group(base))) { (batch, _) =>
+        val cached = Dedup.track(batch.persist())
+        assert(cached.count() === 5)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage === "body failed")
+    leaks.assertNoLeak("a failed batch")
+    assert(!new java.io.File(base, "batch=0").exists())
+    // the batch's scope is closed: a frame tracked now belongs to the
+    // enclosing scope again, so releasing that scope releases it
+    val later = Dedup.track(spark.range(3).toDF("x").persist())
+    assert(later.count() === 3)
+    assert(Dedup.releaseSince(spark, outer) === 1)
+  }
+
+  test("sink scaffold: re-running a batch id overwrites its batch=<id> dirs") {
+    import spark.implicits._
+    val base = freshBase("sink_rerun")
+    val (ta, tb) = (s"$base/a", s"$base/b")
+    def run(ids: Seq[Long]): Unit =
+      Registry.runBatch(ids.toDF("doc_id"), 3L, compactEvery = 1,
+          Seq(Registry.Group(base, Seq(ta, tb)))) { (batch, _) =>
+        Seq(ta -> batch, tb -> batch.select((col("doc_id") * 10).as("doc_id")))
+      }
+    run(Seq(1L, 2L))
+    run(Seq(1L, 2L, 5L)) // the retry of batch 3 sees one more row
+    for (t <- Seq(ta, tb))
+      assert(new java.io.File(t).list().filter(_.startsWith("batch=")).toSeq === Seq("batch=3"))
+    assert(servedRows(base, ta) === Set(1L, 2L, 5L))
+    assert(servedRows(base, tb) === Set(10L, 20L, 50L))
   }
 }

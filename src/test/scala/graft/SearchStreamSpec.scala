@@ -31,6 +31,7 @@ class SearchStreamSpec extends AnyFunSuite {
     val truth = (initial.toMap ++ revised.toMap).toSeq.map { case (id, t) => (id, t) }
 
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = SearchStream.searchIndexSink(
         stream.toDF().toDF("doc_id", "text"), regPath, compactEvery = 2)
       .start()
@@ -38,6 +39,7 @@ class SearchStreamSpec extends AnyFunSuite {
       stream.addData(b); q.processAllAvailable()
     }
     q.stop()
+    leaks.assertNoLeak("searchIndexSink")
 
     def ranked(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1),

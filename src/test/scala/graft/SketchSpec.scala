@@ -57,12 +57,14 @@ class SketchSpec extends AnyFunSuite {
     val keys: Seq[String] =
       (1 to 30).map(i => s"k${i % 7}") ++ Seq.fill(10)("hot")
     val stream = MemoryStream[String]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines.sketchSink(
         stream.toDF().toDF("k"), "k", regPath,
         depth = 3, width = 64, compactEvery = 2)
       .start()
     keys.grouped(7).foreach { h => stream.addData(h); q.processAllAvailable() }
     q.stop()
+    leaks.assertNoLeak("sketchSink")
     val got = graft.streaming.StreamingPipelines.currentSketch(spark, regPath)
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     val want = Sketches.countMinCounters(keys.toDF("k"), col("k"), 3, 64)

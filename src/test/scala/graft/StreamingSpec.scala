@@ -429,12 +429,14 @@ class StreamingSpec extends AnyFunSuite {
     val docRows = docs.orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .decontaminationSink(stream.toDF().toDF("doc_id", "text"), bench, outPath)
       .start()
     val batches = docRows.grouped(math.max(1, docRows.size / 3)).toSeq
     batches.foreach { b => stream.addData(b); q.processAllAvailable() }
     q.stop()
+    leaks.assertNoLeak("decontaminationSink")
     val got = spark.read.parquet(outPath).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     // batch twin: same filter (rebuilt — deterministic), same keep rule
@@ -458,6 +460,7 @@ class StreamingSpec extends AnyFunSuite {
     val docRows = docs.orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.CurateStream.sink(
         stream.toDF().toDF("doc_id", "text"), regPath, outPath,
         graft.pipeline.Curate.Gates(benchmark = Some(bench), maxDup3Frac = 0.02))
@@ -465,6 +468,7 @@ class StreamingSpec extends AnyFunSuite {
     val batches = docRows.grouped(math.max(1, docRows.size / 3)).toSeq
     batches.foreach { h => stream.addData(h); q.processAllAvailable() }
     q.stop()
+    leaks.assertNoLeak("CurateStream.sink")
     // streaming accounting = union of per-batch labels
     val labeled = spark.read.parquet(outPath)
     val gotCounts = labeled.groupBy("drop_reason").count()
@@ -909,12 +913,14 @@ class StreamingSpec extends AnyFunSuite {
     graft.operators.Dedup.releaseCaches(spark)
     assert(want.exists(_._4 > 0), s"fixture must excise something: $want")
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines.spanExcisionSink(
         stream.toDF().toDF("doc_id", "text"), bench, outPath, n = 2, cjk = true)
       .start()
     // excision is per-doc against a static benchmark → batching-free
     docRows.grouped(2).foreach { h => stream.addData(h); q.processAllAvailable() }
     q.stop()
+    leaks.assertNoLeak("spanExcisionSink")
     val got = spark.read.parquet(outPath)
       .select("doc_id", "text", "n_tokens", "n_removed")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
@@ -1004,6 +1010,7 @@ class StreamingSpec extends AnyFunSuite {
     // feed in 5 micro-batches with compactEvery=2: the view must cross
     // at least one registry fold boundary while staying label-identical
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.CurateStream.lmBucketSink(
         stream.toDF().toDF("doc_id", "text"), model, t0, t1, outPath,
         compactEvery = 2)
@@ -1012,6 +1019,7 @@ class StreamingSpec extends AnyFunSuite {
       stream.addData(h); q.processAllAvailable()
     }
     q.stop()
+    leaks.assertNoLeak("lmBucketSink")
     val got = graft.streaming.CurateStream.lmBucketView(spark, outPath)
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     val want = T.lmBucketsFrozen(T.scoreLm(docs, model), t0, t1)
@@ -1046,6 +1054,7 @@ class StreamingSpec extends AnyFunSuite {
     val docRows = corpus.orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .minhashDedupSink(stream.toDF().toDF("doc_id", "text"), regPath, outPath)
       .start()
@@ -1053,6 +1062,7 @@ class StreamingSpec extends AnyFunSuite {
     stream.addData(h1); q.processAllAvailable()
     stream.addData(h2); q.processAllAvailable()
     q.stop()
+    leaks.assertNoLeak("minhashDedupSink")
     val got = spark.read.parquet(outPath).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     val losers = graft.operators.Dedup.minhashLshPairs(corpus)
@@ -1080,6 +1090,7 @@ class StreamingSpec extends AnyFunSuite {
       .orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toSeq
     val stream = MemoryStream[(Long, Array[Byte])]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .imageDedupSink(stream.toDF().toDF("doc_id", "img"), regPath, outPath)
       .start()
@@ -1087,6 +1098,7 @@ class StreamingSpec extends AnyFunSuite {
     stream.addData(h1); q.processAllAvailable()
     stream.addData(h2); q.processAllAvailable()
     q.stop()
+    leaks.assertNoLeak("imageDedupSink")
     val got = spark.read.parquet(outPath).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     // batch formulation: drop doc_b of every hamming <= 3 pair
@@ -1118,6 +1130,7 @@ class StreamingSpec extends AnyFunSuite {
       .orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toSeq
     val stream = MemoryStream[(Long, Array[Byte])]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .audioDedupSink(stream.toDF().toDF("doc_id", "audio"), regPath, outPath)
       .start()
@@ -1125,6 +1138,7 @@ class StreamingSpec extends AnyFunSuite {
     stream.addData(h1); q.processAllAvailable()
     stream.addData(h2); q.processAllAvailable()
     q.stop()
+    leaks.assertNoLeak("audioDedupSink")
     val got = spark.read.parquet(outPath).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     // batch formulation: drop doc_b of every hamming <= 3 pair
@@ -1199,6 +1213,7 @@ class StreamingSpec extends AnyFunSuite {
       .orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toSeq
     val stream = MemoryStream[(Long, Array[Byte])]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .mediaCurateSink(stream.toDF().toDF("doc_id", "audio"), regPath, outPath,
         graft.pipeline.MediaCurate.AudioGates())
@@ -1207,6 +1222,7 @@ class StreamingSpec extends AnyFunSuite {
     stream.addData(h1); q.processAllAvailable()
     stream.addData(h2); q.processAllAvailable()
     q.stop()
+    leaks.assertNoLeak("mediaCurateSink")
     val got = spark.read.parquet(outPath).select("doc_id", "drop_reason")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val want = graft.pipeline.MediaCurate.curate(spark,
@@ -1232,6 +1248,7 @@ class StreamingSpec extends AnyFunSuite {
       .orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toSeq
     val stream = MemoryStream[(Long, Array[Byte])]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .videoDedupSink(stream.toDF().toDF("doc_id", "video"), regPath, outPath)
       .start()
@@ -1239,6 +1256,7 @@ class StreamingSpec extends AnyFunSuite {
     stream.addData(h1); q.processAllAvailable()
     stream.addData(h2); q.processAllAvailable()
     q.stop()
+    leaks.assertNoLeak("videoDedupSink")
     val got = spark.read.parquet(outPath).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     // batch formulation: keyframe keepers at hamming 0
@@ -1353,6 +1371,7 @@ class StreamingSpec extends AnyFunSuite {
     val vids = byId(graft.operators.Video.synthesize(spark, docs))
     val rows = imgs.keys.toSeq.sorted.map(id => (id, imgs(id), clips(id), vids(id)))
     val stream = MemoryStream[(Long, Array[Byte], Array[Byte], Array[Byte])]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .mediaCurate3Sink(stream.toDF().toDF("doc_id", "img", "audio", "video"),
         regRoot, outPath)
@@ -1361,6 +1380,7 @@ class StreamingSpec extends AnyFunSuite {
     stream.addData(h1); q.processAllAvailable()
     stream.addData(h2); q.processAllAvailable()
     q.stop()
+    leaks.assertNoLeak("mediaCurate3Sink")
     val got = spark.read.parquet(outPath)
       .select("doc_id", "image_reason", "audio_reason", "video_reason",
         "drop_reason")
@@ -1464,6 +1484,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .winnowDedupSink(stream.toDF().toDF("doc_id", "text"), regPath, outPath)
       .start()
@@ -1471,6 +1492,7 @@ class StreamingSpec extends AnyFunSuite {
     stream.addData(h1); q.processAllAvailable()
     stream.addData(h2); q.processAllAvailable()
     q.stop()
+    leaks.assertNoLeak("winnowDedupSink")
     val got = spark.read.parquet(outPath).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     // batch formulation: drop the larger-id side of every >=2-shared-fp pair
@@ -1493,6 +1515,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .winnowClusterSink(stream.toDF().toDF("doc_id", "text"), regPath, labelsPath)
       .start()
@@ -1503,6 +1526,7 @@ class StreamingSpec extends AnyFunSuite {
     stream.addData(docRows.slice(third, 2 * third)); q.processAllAvailable()
     stream.addData(docRows.drop(2 * third)); q.processAllAvailable()
     q.stop()
+    leaks.assertNoLeak("winnowClusterSink")
     val got = graft.streaming.StreamingPipelines.currentClusters(spark, labelsPath)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
@@ -1536,6 +1560,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .spanDedupSink(stream.toDF().toDF("doc_id", "text"), spanPath, k = 8)
       .start()
@@ -1547,10 +1572,12 @@ class StreamingSpec extends AnyFunSuite {
     val midDocs = docRows.take(third).toDF("doc_id", "text")
     val midWant = graft.operators.Dedup.dedupSpans(midDocs, k = 8)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+    graft.operators.Dedup.releaseCaches(spark) // the batch twin's caches
     assert(midGot === midWant)
     stream.addData(docRows.slice(third, 2 * third)); q.processAllAvailable()
     stream.addData(docRows.drop(2 * third)); q.processAllAvailable()
     q.stop()
+    leaks.assertNoLeak("spanDedupSink")
     val got = graft.streaming.StreamingPipelines.currentSpanDedup(spark, spanPath)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
     val want = graft.operators.Dedup
@@ -1580,6 +1607,7 @@ class StreamingSpec extends AnyFunSuite {
       (3L, s"$boiler XY zz ww vv"),
       (4L, "plain latin text only here now"))
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .spanDedupSink(stream.toDF().toDF("doc_id", "text"), spanPath, k = 3,
         cjk = true)
@@ -1592,9 +1620,11 @@ class StreamingSpec extends AnyFunSuite {
     val midWant = graft.operators.Dedup
       .dedupSpans(docRows.take(2).toDF("doc_id", "text"), k = 3, cjk = true)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+    graft.operators.Dedup.releaseCaches(spark) // the batch twin's caches
     assert(midGot === midWant)
     stream.addData(docRows.drop(2)); q.processAllAvailable()
     q.stop()
+    leaks.assertNoLeak("spanDedupSink cjk")
     val got = graft.streaming.StreamingPipelines
       .currentSpanDedup(spark, spanPath, cjk = true)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
@@ -1640,6 +1670,7 @@ class StreamingSpec extends AnyFunSuite {
     val docRows = corpus.orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.StreamingPipelines
       .minhashDedupSink(stream.toDF().toDF("doc_id", "text"), regPath, outPath,
         compactEvery = 2)
@@ -1649,6 +1680,7 @@ class StreamingSpec extends AnyFunSuite {
     val batches = docRows.grouped(math.max(1, docRows.size / 6 + 1)).toSeq
     batches.foreach { h => stream.addData(h); q.processAllAvailable() }
     q.stop()
+    leaks.assertNoLeak("minhashDedupSink")
     val got = spark.read.parquet(outPath).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     val losers = graft.operators.Dedup.minhashLshPairs(corpus)
@@ -1682,6 +1714,7 @@ class StreamingSpec extends AnyFunSuite {
     val docRows = docs.orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val stream = MemoryStream[(Long, String)]
+    val leaks = SparkTestSession.leakCheck()
     val q = graft.streaming.CurateStream.sink(
         stream.toDF().toDF("doc_id", "text"), regPath, outPath,
         compactEvery = 2)
@@ -1689,6 +1722,7 @@ class StreamingSpec extends AnyFunSuite {
     val batches = docRows.grouped(math.max(1, docRows.size / 6 + 1)).toSeq
     batches.foreach { h => stream.addData(h); q.processAllAvailable() }
     q.stop()
+    leaks.assertNoLeak("CurateStream.sink")
     // the output folded too: read through labeledView (snapshot + recent
     // dirs, exactly-once), not a whole-dir parquet read
     val labeled = graft.streaming.CurateStream.labeledView(spark, outPath)

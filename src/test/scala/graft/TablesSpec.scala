@@ -27,14 +27,9 @@ class TablesSpec extends AnyFunSuite {
         if (ev.properties != null && ev.properties.getProperty("spark.jobGroup.id") == group)
           n.incrementAndGet()
     }
-    def drain(): Unit = { // LiveListenerBus.waitUntilEmpty is private[spark]
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      ()
-    }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "counted")
-    try { val r = f; drain(); (r, n.get) }
+    try { val r = f; SparkTestSession.drainListeners(); (r, n.get) }
     finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
 
